@@ -575,10 +575,10 @@ FROM sc JOIN ac ON sc.r = ac.r AND sc.c = ac.c""")
 def r4_slope_aspect_tiled(spark, sf_dir):
     """R4 through the PRODUCTION tiled path: the events grid is packed into
     10x25-px DEM tiles and slope/aspect flow through
-    raster.slope_aspect_tiles — border-strip fan-out, halo assembly,
-    per-supertile applyInArrow — so the correctness gate exercises the same
-    plan the 100-TB pipeline runs (the single-group r4_slope_aspect twin
-    remains as the kernel-only oracle)."""
+    raster.slope_aspect_tiles — border-strip fan-out, tile-keyed
+    exchange, per-tile halo assembly — so the correctness gate exercises
+    the same plan the 100-TB pipeline runs (the single-group
+    r4_slope_aspect twin remains as the kernel-only oracle)."""
     from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
                                    IntegerType, StringType, StructField,
                                    StructType)

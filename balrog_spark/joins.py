@@ -761,6 +761,12 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
         # _spread repartition only exists to parallelize ring refines)
         frontier = points.select("addr_id", "x", "y") if go_direct \
             else unresolved.select("addr_id", "x", "y")
+        pending_n = n_pts - n_resolved
+        if pending_n > STRAGGLER_DIRECT_MAX:
+            raise RuntimeError(
+                f"knn_join straggler frontier holds {pending_n} points, "
+                f"over STRAGGLER_DIRECT_MAX={STRAGGLER_DIRECT_MAX}: "
+                "refusing to collect it to the driver")
         far_bc = spark.sparkContext.broadcast(frontier.toPandas())
         k_slots = k
         out_cols = [f.name for f in out_schema]
@@ -799,6 +805,12 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
                         else float(bal)
                     cand = [d, np.full(n, r.veg_id, dtype=object),
                             np.full(n, bal), nx_, ny_, az]
+                    # slots stay distinct per veg (a veg may have several
+                    # polygon rows): the chain stops at the slot already
+                    # holding this veg — the new candidate updates it in
+                    # place if closer; a displaced entry overwrites it
+                    active = np.ones(n, dtype=bool)
+                    placed = np.zeros(n, dtype=bool)
                     for i in range(k_slots):
                         better = cand[0] < D[i]
                         # finite ties only: an inf "tie" is two empty
@@ -812,11 +824,19 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
                                 (a < b for a, b in
                                  zip(cand[1][ti], VEG[i][ti])),
                                 bool, len(ti))
-                        if better.any():
+                        if k_slots == 1:
+                            swap, put = better, better
+                        else:
+                            dup = active & (VEG[i] == r.veg_id)
+                            swap = active & ~dup & better
+                            put = swap | (dup & (placed | better))
+                            placed |= swap
+                            active &= ~dup
+                        if put.any():
                             for j, S in enumerate(slots):
                                 disp = S[i]
-                                S[i] = np.where(better, cand[j], disp)
-                                cand[j] = np.where(better, disp, cand[j])
+                                S[i] = np.where(put, cand[j], disp)
+                                cand[j] = np.where(swap, disp, cand[j])
             out = []
             for i in range(k_slots):
                 msk = np.isfinite(D[i])

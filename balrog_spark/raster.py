@@ -7,8 +7,11 @@ DataFrame; cross-tile dependencies are satisfied by a *border-strip fan-out*:
 
     tiles --mapInArrow--> 9 contribution rows each (self + 8 border strips,
                           only the <=halo-wide slices a neighbour needs)
-         --groupBy(tile)--> applyInArrow: assemble padded array, run the
-                          vectorized kernel chain, emit core results
+         --repartition(n, tile) + sort--> mapInArrow, one Python call per
+                          partition over runs of whole tiles
+                          (session.map_key_groups): assemble padded
+                          array, run the vectorized kernel chain, emit
+                          core results
 
 One shuffle total, inflated only by ~(1 + 4*halo/tile_n) (~1.1x at the
 256-px production tile size). The data plane is Arrow-native end to end:
@@ -35,6 +38,7 @@ from pyspark.sql.types import (DoubleType, FloatType, LongType, StructField,
 from . import kernels
 from .constants import ASPECT_REMAP, NODATA, slope_remap
 from .corpus import VEG_REMAP
+from .session import map_key_groups
 
 # default halo: scan width 4 (ceil(100/25)) + 1 gradient px + 8 px worst-case
 # nodata run in the synthetic corpus
@@ -217,42 +221,28 @@ def _crop_absent_sides(arrays, present, h, n, m):
 
 
 
-SUPERTILE = 4  # tiles per group side: batches ~16 tiles per Arrow group to
-               # amortize per-group UDF overhead (5k+ tiny groups otherwise)
+def _per_tile_apply(contribs: DataFrame, per_tile_fn, ddl: str) -> DataFrame:
+    """Key the contributions on the tile and run ``per_tile_fn`` once per
+    tile, with one Python call per partition (session.map_key_groups).
 
-
-def _per_tile_apply(contribs: DataFrame, per_tile_fn, ddl: str,
-                    pa_schema: pa.Schema,
-                    supertile: int = SUPERTILE) -> DataFrame:
-    """groupBy supertile -> applyInArrow -> per-tile sub-tables.
-
-    The shuffle key is the supertile (floor(tile/supertile)); inside the UDF
-    the group is split back into per-tile tables with numpy masks + take.
-    Neighbour halos still work because emit targets carry the final tile id.
+    Each call gets runs of whole tiles sorted by (tile_x, tile_y), so a
+    tile's strips are one contiguous slice of the run. Neighbour halos
+    work because every strip already carries its target tile id.
     """
 
-    def compute(key: tuple, tbl: pa.Table) -> pa.Table:
+    def compute(tbl: pa.Table):
         txs = tbl.column("tile_x").to_numpy()
         tys = tbl.column("tile_y").to_numpy()
-        keys = (txs.astype(np.int64) << 32) ^ (tys.astype(np.int64)
-                                               & 0xFFFFFFFF)
+        cuts = np.flatnonzero((np.diff(txs) != 0) | (np.diff(tys) != 0)) + 1
+        bounds = [0, *cuts.tolist(), tbl.num_rows]
         out = []
-        for k in np.unique(keys):
-            idx = np.nonzero(keys == k)[0]
-            sub = tbl.take(pa.array(idx))
-            t = per_tile_fn(int(txs[idx[0]]), int(tys[idx[0]]), sub)
+        for a, b in zip(bounds[:-1], bounds[1:]):
+            t = per_tile_fn(int(txs[a]), int(tys[a]), tbl.slice(a, b - a))
             if t is not None:
                 out.append(t)
-        if out:
-            return pa.concat_tables(out)
-        return pa.Table.from_arrays(
-            [pa.array([], t) for t in pa_schema.types], schema=pa_schema)
+        return pa.concat_tables(out) if out else None
 
-    st = F.lit(int(supertile))
-    grouped = contribs.groupBy(
-        F.floor(F.col("tile_x") / st).alias("_gx"),
-        F.floor(F.col("tile_y") / st).alias("_gy"))
-    return grouped.applyInArrow(compute, schema=ddl)
+    return map_key_groups(contribs, ["tile_x", "tile_y"], compute, ddl)
 
 
 _PA_BAL = pa.schema(
@@ -314,7 +304,7 @@ def bal_tiles(tiles: DataFrame, fdi: int, halo: int = DEFAULT_HALO,
                 [outs[d][sl].astype(np.float32)]))
         return pa.Table.from_arrays(cols, schema=_PA_BAL)
 
-    return _per_tile_apply(contribs, per_tile, _BAL_DDL, _PA_BAL)
+    return _per_tile_apply(contribs, per_tile, _BAL_DDL)
 
 
 def bal_tiles_classified(tiles: DataFrame, fdi: int,
@@ -351,7 +341,7 @@ def bal_tiles_classified(tiles: DataFrame, fdi: int,
                 [outs[d][sl].astype(np.float32)]))
         return pa.Table.from_arrays(cols, schema=_PA_BAL)
 
-    return _per_tile_apply(contribs, per_tile, _BAL_DDL, _PA_BAL)
+    return _per_tile_apply(contribs, per_tile, _BAL_DDL)
 
 
 _PA_BAL_MAX = pa.schema([
@@ -415,7 +405,7 @@ def bal_max_tiles(tiles: DataFrame, fdis=(100, 80, 50, 40),
             _float_list_array(maxes),
         ], schema=_PA_BAL_MAX)
 
-    return _per_tile_apply(contribs, per_tile, _BAL_MAX_DDL, _PA_BAL_MAX)
+    return _per_tile_apply(contribs, per_tile, _BAL_MAX_DDL)
 
 
 def slope_aspect_tiles(tiles: DataFrame, halo: int = DEFAULT_HALO,
@@ -470,7 +460,7 @@ def slope_aspect_tiles(tiles: DataFrame, halo: int = DEFAULT_HALO,
     ddl = ("media_ref STRING, layer STRING, tile_x INT, tile_y INT, "
            "x0 DOUBLE, y0 DOUBLE, pixel_m DOUBLE, nrows INT, ncols INT, "
            "data ARRAY<FLOAT>")
-    return _per_tile_apply(contribs, per_tile, ddl, pa_tiles)
+    return _per_tile_apply(contribs, per_tile, ddl)
 
 
 def build_pyramid(tiles: DataFrame, levels: int = 3,

@@ -1,4 +1,6 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, plus the plan
+helpers every module shares (the checkpoint barrier and the grouped
+Python stage).
 
 Settings chosen for the 100 TB design point and applied identically in tests
 and benchmarks:
@@ -15,6 +17,9 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 
 
@@ -86,3 +91,74 @@ def local_checkpoint_fresh(df):
     fresh = spark._jsparkSession.internalCreateDataFrame(
         jdf.queryExecution().toRdd(), jdf.schema(), False)
     return DataFrame(fresh, spark)
+
+
+def map_key_groups(df, keys, fn, schema):
+    """Run ``fn`` over whole key groups with ONE Python call per partition.
+
+    The grouped stage every tiled/zonal operator needs, planned as:
+    an exchange pinned at ``defaultParallelism`` partitions on ``keys``
+    (``repartition(n, *keys)``, which AQE never coalesces — its
+    byte-based coalescing packed the compute-dense grouped stages into
+    one task), a sort of each partition by ``keys`` (the sort
+    ``groupBy().applyInArrow`` plans), and one ``mapInArrow`` call per
+    partition. That call streams runs of COMPLETE key groups to
+    ``fn(table) -> pa.Table | None``: each run is the groups that end
+    inside one Arrow batch plus the group carried over from the batch
+    before, so memory stays bounded by one Arrow batch plus one key
+    group (the ``applyInArrow`` bound) while the per-group UDF call and
+    its pandas/Arrow round trip are gone. ``fn`` must accept any number
+    of whole groups, sorted by key; it never sees a group split across
+    two calls. ``schema`` is the output schema (DDL or StructType); the
+    tables ``fn`` returns must carry its Arrow types."""
+    keys = list(keys)
+    n = df.sparkSession.sparkContext.defaultParallelism
+
+    def run(batches):
+        for tbl in _key_group_runs(batches, keys):
+            out = fn(tbl)
+            if out is not None and out.num_rows:
+                yield from out.to_batches()
+
+    return (df.repartition(n, *keys).sortWithinPartitions(*keys)
+            .mapInArrow(run, schema))
+
+
+def _key_group_runs(batches, keys):
+    """Tables of whole key groups from key-sorted record batches. Only
+    the last group of a batch can continue into the next batch, so it
+    is held back (``pending``: always rows of ONE key) until a later
+    batch shows a different key."""
+    pending = []
+    for b in batches:
+        if not b.num_rows:
+            continue
+        tail = _last_group_start(b, keys)
+        if tail:
+            yield pa.Table.from_batches(pending + [b.slice(0, tail)])
+            pending = [b.slice(tail)]
+        elif pending and _key_at(pending[-1], -1, keys) != \
+                _key_at(b, 0, keys):
+            yield pa.Table.from_batches(pending)
+            pending = [b]
+        else:
+            pending.append(b)
+    if pending:
+        yield pa.Table.from_batches(pending)
+
+
+def _key_at(batch, i, keys):
+    return tuple(batch.column(k)[i].as_py() for k in keys)
+
+
+def _last_group_start(batch, keys) -> int:
+    """Index of the first row holding the batch's last key (the rows
+    with that key are a suffix: the batch is sorted by ``keys``)."""
+    same = np.ones(batch.num_rows, dtype=bool)
+    for k in keys:
+        col = batch.column(k)
+        v = col[-1]
+        eq = pc.is_null(col) if not v.is_valid \
+            else pc.fill_null(pc.equal(col, v), False)
+        same &= eq.to_numpy(zero_copy_only=False)
+    return int(np.argmax(same))

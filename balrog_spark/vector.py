@@ -297,7 +297,7 @@ def dissolve_union(polys: DataFrame, class_col: str = "bal_number",
     # batch (cls, cell) groups by 8x8-cell supercells — applyInPandas pays
     # ~ms per GROUP in Arrow stream overhead (and AQE may coalesce the tiny
     # shuffle onto one task), so per-cell groups don't amortize; cells are
-    # iterated inside the batch (the zonal/raster supertile trick)
+    # iterated inside the batch
     def cell_union(key, pdf: pd.DataFrame):
         rows = []
         for (cls, cell), grp in pdf.groupby(["cls", "cell_id"],

@@ -3,12 +3,14 @@
 Reference shape: buffer each address, mask the raster with the buffer, stats
 over surviving pixels (reference: testing/02_get_slope_from_buffer.py:219-251).
 Engine shape: a pure-column tile-range join (buffer bbox -> tile_x/tile_y
-sequence, exploded JVM-side) followed by ONE batched applyInPandas per
-address-batch cell — addresses are grouped by a coarse spatial cell
-(``batch_m``, default 4 tiles) and iterated INSIDE the Arrow batch, the same
-supertile trick raster._per_tile_apply uses. One pandas group per address
-(14M tiny groups at reference scale) does not amortize; one per batch cell
-does.
+sequence, exploded JVM-side) followed by ONE grouped Python stage
+(session.map_key_groups): the (address, tile) rows are clustered on a
+coarse spatial cell (``batch_m``, default 2 tiles) over an exchange pinned
+at ``defaultParallelism`` partitions, and one Python call per partition
+iterates runs of whole cells — the same plan raster._per_tile_apply uses.
+``batch_m`` only sets the clustering cell, not the number of Python calls:
+a call per address (14M at reference scale) or per cell would pay a UDF
+call and a pandas/Arrow round trip per group.
 
 Sentinel contract: the tile join is a LEFT join, so an address whose buffer
 touches no stored tile still yields a row with the reference's -9999
@@ -26,13 +28,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType)
 
 from . import geometry, kernels
 from .joins import _geom_of   # shared worker-global WKT-parse cache
 from .corpus import TILE_M
+from .session import map_key_groups
 
 ZONAL_OUT = StructType([
     StructField("addr_id", StringType(), False),
@@ -45,10 +50,10 @@ ZONAL_OUT = StructType([
     StructField("pixel_count", IntegerType(), False),
 ])
 
-# address-batch cell side: one pandas group per ~2x2 tiles of addresses —
-# coarse enough to amortize per-group Arrow overhead (hundreds of
-# addresses/group at production density), fine enough that small AOIs
-# still yield >= cores groups (batching must not throttle parallelism)
+# address-batch cell side (~2x2 tiles): the clustering cell of the
+# grouped stage — whole cells stay in one Python call, so addresses that
+# share tiles share a run; fine enough that small AOIs still spread over
+# every partition (batching must not throttle parallelism)
 DEFAULT_BATCH_M = 2 * TILE_M
 
 
@@ -204,12 +209,24 @@ def _segment_values(group: pd.DataFrame, key_of_row: np.ndarray,
     return dict(zip(uk.tolist(), np.split(sv, starts[1:])))
 
 
-def _batched(joined: DataFrame, per_batch, out_schema,
+def _batched(joined: DataFrame, cx, cy, per_batch, out_schema,
              batch_m: float) -> DataFrame:
-    grouped = joined.groupBy(
-        F.floor(F.col("x") / F.lit(float(batch_m))).alias("_bx"),
-        F.floor(F.col("y") / F.lit(float(batch_m))).alias("_by"))
-    return grouped.applyInPandas(per_batch, schema=out_schema)
+    """Cluster the (zone, tile) rows on the ``batch_m`` cell of each
+    zone's anchor point (``cx``, ``cy`` column expressions; every row of
+    a zone shares it) and run ``per_batch(pandas_frame)`` over runs of
+    whole cells, one Python call per partition (session.map_key_groups).
+    ``per_batch`` must handle any number of zones; it returns a pandas
+    frame with the columns of ``out_schema``."""
+    cell = F.lit(float(batch_m))
+    keyed = joined.withColumn("_bx", F.floor(cx / cell)) \
+        .withColumn("_by", F.floor(cy / cell))
+    pa_schema = to_arrow_schema(out_schema)
+
+    def run(tbl: pa.Table) -> pa.Table:
+        return pa.Table.from_pandas(per_batch(tbl.to_pandas()),
+                                    schema=pa_schema, preserve_index=False)
+
+    return map_key_groups(keyed, ["_bx", "_by"], run, out_schema)
 
 
 def zonal_stats(points: DataFrame, tiles: DataFrame, radius_m: float,
@@ -232,7 +249,7 @@ def zonal_stats(points: DataFrame, tiles: DataFrame, radius_m: float,
     joined = tiles_for_buffers(points, tiles, radius_m, tile_m=tile_m,
                                crop=crop)
 
-    def stats(key, group: pd.DataFrame):
+    def stats(group: pd.DataFrame):
         codes, uniq = pd.factorize(group["addr_id"], sort=False)
         segs = _segment_values(group, codes, radius_m, nodata, include)
         rows = []
@@ -248,7 +265,8 @@ def zonal_stats(points: DataFrame, tiles: DataFrame, radius_m: float,
             })
         return pd.DataFrame(rows, columns=[f.name for f in ZONAL_OUT])
 
-    return _batched(joined, stats, ZONAL_OUT, batch_m)
+    return _batched(joined, F.col("x"), F.col("y"), stats, ZONAL_OUT,
+                    batch_m)
 
 
 def zonal_stats_multi(points: DataFrame, tiles: DataFrame, radius_m: float,
@@ -278,7 +296,7 @@ def zonal_stats_multi(points: DataFrame, tiles: DataFrame, radius_m: float,
     lay_code = {lay: i for i, lay in enumerate(layers)}
     L = len(layers)
 
-    def stats(key, group: pd.DataFrame):
+    def stats(group: pd.DataFrame):
         codes, uniq = pd.factorize(group["addr_id"], sort=False)
         lcodes = group["layer"].map(lay_code).fillna(-1).to_numpy(np.int64)
         key_of_row = np.where(lcodes >= 0, codes * L + lcodes, -1)
@@ -298,10 +316,10 @@ def zonal_stats_multi(points: DataFrame, tiles: DataFrame, radius_m: float,
             rows.append(row)
         return pd.DataFrame(rows, columns=[f.name for f in out_schema])
 
-    return _batched(joined, stats, out_schema, batch_m)
+    return _batched(joined, F.col("x"), F.col("y"), stats, out_schema,
+                    batch_m)
 
 
-# worker-global parsed-zone cache (clip WKTs repeat across tile rows)
 def zonal_stats_poly(zones: DataFrame, tiles: DataFrame, layer_specs: dict,
                      sentinel: float = -9999.0, nodata: float = -99.0,
                      batch_m: float = DEFAULT_BATCH_M,
@@ -310,15 +328,16 @@ def zonal_stats_poly(zones: DataFrame, tiles: DataFrame, layer_specs: dict,
     is (zone_id, wkt, xmin, ymin, xmax, ymax) — the bbox columns keep the
     tile-range join and the window crop in pure codegen; the exact
     pixel-centre-in-polygon mask (holes/even-odd) runs vectorized inside
-    the batched applyInPandas. This is the per-clipped-vegetation-polygon
+    the grouped Python stage. This is the per-clipped-vegetation-polygon
     median step of the reference's Auto BAL Assessment (reference:
     data_prep/vegetation/xx_fiona_testing.py:218-221 get_raster_values
     per clipped veg geom), where :func:`zonal_stats` covers its circular
     per-address buffer twin.
 
     Same scale shape as zonal_stats: the shuffle ships bbox-cropped
-    windows (never whole tiles), one pandas group per coarse batch cell
-    (never per zone), sentinel row for zones touching no stored tile."""
+    windows (never whole tiles), one Python call per partition over runs
+    of whole batch cells (keyed on the zone's bbox centre), sentinel row
+    for zones touching no stored tile."""
     layers = sorted(layer_specs)
     n_par = zones.sparkSession.sparkContext.defaultParallelism
     base = ["zone_id", "wkt", "xmin", "ymin", "xmax", "ymax"]
@@ -347,7 +366,7 @@ def zonal_stats_poly(zones: DataFrame, tiles: DataFrame, layer_specs: dict,
                                       False))
     out_schema = StructType(fields)
 
-    def stats(key, group: pd.DataFrame):
+    def stats(group: pd.DataFrame):
         vals: dict = {}
         seen: dict = {}
         for r in group.itertuples():
@@ -384,17 +403,6 @@ def zonal_stats_poly(zones: DataFrame, tiles: DataFrame, layer_specs: dict,
             rows.append(row)
         return pd.DataFrame(rows, columns=[f.name for f in out_schema])
 
-    # pin the batch-cell exchange at cluster parallelism: the apply
-    # stage is compute-dense per byte (per-pixel PIP masks), which AQE's
-    # byte-based coalescing serializes (measured: 1.95 s on 5 tasks with
-    # 32 cores idle in the flagship chain). The explicit keyed
-    # repartition is reused by the groupBy (same clustering), so this
-    # swaps the exchange rather than adding one.
-    keyed = joined.withColumn(
-        "_bx", F.floor((F.col("xmin") + F.col("xmax"))
-                       / F.lit(2.0 * float(batch_m)))).withColumn(
-        "_by", F.floor((F.col("ymin") + F.col("ymax"))
-                       / F.lit(2.0 * float(batch_m)))) \
-        .repartition(n_par, "_bx", "_by")
-    return keyed.groupBy("_bx", "_by").applyInPandas(stats,
-                                                     schema=out_schema)
+    return _batched(joined, (F.col("xmin") + F.col("xmax")) / 2.0,
+                    (F.col("ymin") + F.col("ymax")) / 2.0, stats,
+                    out_schema, batch_m)

@@ -256,18 +256,27 @@ def test_zonal_sentinel_for_tile_less_address(spark, corpus_dfs):
     assert got.loc["inworld"].pixel_count > 0
 
 
-def test_zonal_batching_matches_per_address_semantics(spark, corpus_dfs):
-    """Tiny batch cells (many groups) and one huge batch cell (single
-    group) must produce identical stats — batching is pure plumbing."""
+def test_zonal_batching_matches_per_address_semantics(spark, corpus_dfs,
+                                                      tiny_arrow_batches):
+    """Tiny batch cells (many groups), one huge batch cell (single
+    group) and 1-row Arrow batches must produce identical stats —
+    batching is pure plumbing."""
     docs, tiles = corpus_dfs
     dem = tiles.filter(F.col("layer") == "dem")
     pts = docparse.addresses_from_documents(docs).select("addr_id", "x", "y")
-    a = zonal.zonal_stats(pts, dem, 100.0, batch_m=64.0).toPandas() \
-        .sort_values("addr_id").reset_index(drop=True)
-    b = zonal.zonal_stats(pts, dem, 100.0, batch_m=1e9).toPandas() \
-        .sort_values("addr_id").reset_index(drop=True)
+
+    def run(radius_m, batch_m):
+        return zonal.zonal_stats(pts, dem, radius_m, batch_m=batch_m) \
+            .toPandas().sort_values("addr_id").reset_index(drop=True)
+
     import pandas as pd
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(run(100.0, 64.0), run(100.0, 1e9))
+    # 900 m buffers span several tiles, so with 1-row Arrow batches
+    # every address's rows straddle batch boundaries
+    a = run(900.0, 64.0)
+    with tiny_arrow_batches(rows=1):
+        c = run(900.0, 64.0)
+    pd.testing.assert_frame_equal(a, c)
 
 
 def test_knn_join_exact_at_tiny_ring_budget(corpus_dfs, flat):

@@ -46,9 +46,15 @@ def bal_result(spark):
     return {(r.tile_x, r.tile_y): r for r in out}
 
 
-def test_bal_tiles_match_global_computation(bal_result):
+def test_bal_tiles_match_global_computation(spark, bal_result,
+                                            tiny_arrow_batches):
     n = corpus.TILE_N
     expected = global_bal(NX, NY)
+    # 7-row Arrow batches: a tile's strips straddle batch boundaries
+    with tiny_arrow_batches():
+        tiny = raster.bal_tiles(corpus.spark_tiles(spark, NX, NY),
+                                fdi=FDI).collect()
+    assert {(r.tile_x, r.tile_y): r for r in tiny} == bal_result
     assert len(bal_result) == NX * NY
     for (tx, ty), row in bal_result.items():
         r0 = (NY - 1 - ty) * n

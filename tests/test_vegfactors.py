@@ -212,14 +212,20 @@ def test_zonal_stats_poly_matches_bruteforce(spark, dem_tiles):
     assert got.loc["z_off", "dem_pixel_count"] == -9999
 
 
-def test_zonal_stats_poly_batching_invariant(spark, dem_tiles):
+def test_zonal_stats_poly_batching_invariant(spark, dem_tiles,
+                                             tiny_arrow_batches):
     zones = _zones_df(spark)
     spec = {"dem": {"circular": False}}
     a = zonal.zonal_stats_poly(zones, dem_tiles, spec, batch_m=64.0) \
         .toPandas().sort_values("zone_id").reset_index(drop=True)
     b = zonal.zonal_stats_poly(zones, dem_tiles, spec, batch_m=1e9) \
         .toPandas().sort_values("zone_id").reset_index(drop=True)
+    # 1-row Arrow batches: z_tri's two tile rows straddle batches
+    with tiny_arrow_batches(rows=1):
+        c = zonal.zonal_stats_poly(zones, dem_tiles, spec, batch_m=64.0) \
+            .toPandas().sort_values("zone_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(a, c)
 
 
 def test_veg_factors_concave_disconnected_clip(spark):

@@ -3,10 +3,14 @@ driver_queries entry on Spark and its oracle on DuckDB, compare row count +
 column names + order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+The Spark master is $SPARK_GRAFT_MASTER (default local[8]), e.g.
+SPARK_GRAFT_MASTER='local[1]' python tools/check_oracles.py ...
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -39,7 +43,9 @@ def main():
     from balrog_spark import driver_queries as dq
     from balrog_spark.session import get_spark
 
-    spark = get_spark(app="oracle-check", master="local[8]",
+    spark = get_spark(app="oracle-check",
+                      master=os.environ.get("SPARK_GRAFT_MASTER",
+                                            "local[8]"),
                       shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
