@@ -12,14 +12,16 @@ data_prep/vegetation/xx_fiona_testing.py:133-136). The engine's substitute:
    each Arrow batch by polygon so every ring is parsed once and tested
    against all its candidate points at once.
 
-kNN uses iterative ring expansion with a distance lower bound
-((ring-1) * cell_m) so each point stops as soon as no unexamined cell can
-hold anything closer — the driver loop runs O(max_ring) Spark jobs over a
-shrinking unresolved set (reference behaviour: shapely nearest_points over a
-250 m fiona mask, reference: data_prep/vegetation/xx_fiona_testing.py:203-217).
+kNN runs one ring loop of cover-bbox-clamped annuli with a distance lower
+bound (ring * cell_m), so each point stops as soon as no unexamined cell can
+hold anything closer — O(log cover extent) rounds over a shrinking
+unresolved set (reference behaviour: shapely nearest_points over a 250 m
+fiona mask, reference: data_prep/vegetation/xx_fiona_testing.py:203-217).
 """
 
 from __future__ import annotations
+
+from itertools import chain, count
 
 import numpy as np
 import pandas as pd
@@ -56,17 +58,30 @@ AUTO_BROADCAST_MAX_COVER_BYTES = 512 << 20
 _WKT_ROW_OVERHEAD_B = 64  # ids + struct framing per cover row
 
 
-def _cover_fits_broadcast(cover: DataFrame) -> bool:
-    """ONE truncated job over the (tiny vs points) cover side: count rows
-    up to the row cap and average the WKT length over that same prefix;
-    broadcast only if both the row AND estimated-byte bounds hold."""
+def _cell_bbox():
+    """min/max aggregates of the packed cell_id's grid x and y."""
+    gx, gy = F.expr("cell_id DIV 1048576"), F.expr("cell_id % 1048576")
+    return [F.min(gx).alias("gx0"), F.max(gx).alias("gx1"),
+            F.min(gy).alias("gy0"), F.max(gy).alias("gy1")]
+
+
+def _probe_cover(cover: DataFrame):
+    """ONE truncated job over the (tiny vs points) cover side: row count
+    up to the row cap, mean WKT length and cell bbox over that prefix
+    (exact under the cap). Returns (that row, fits_broadcast): broadcast
+    only if both the row AND estimated-byte bounds hold."""
     probe = (cover.limit(AUTO_BROADCAST_MAX_COVER_ROWS + 1)
              .agg(F.count("*").alias("n"),
-                  F.avg(F.length("wkt")).alias("w")).collect()[0])
+                  F.avg(F.length("wkt")).alias("w"), *_cell_bbox())
+             .collect()[0])
     if probe.n > AUTO_BROADCAST_MAX_COVER_ROWS:
-        return False
+        return probe, False
     est = probe.n * ((probe.w or 0.0) + _WKT_ROW_OVERHEAD_B)
-    return est <= AUTO_BROADCAST_MAX_COVER_BYTES
+    return probe, est <= AUTO_BROADCAST_MAX_COVER_BYTES
+
+
+def _cover_fits_broadcast(cover: DataFrame) -> bool:
+    return _probe_cover(cover)[1]
 
 
 def _maybe_broadcast(cover: DataFrame, broadcast_cover):
@@ -77,7 +92,7 @@ def _maybe_broadcast(cover: DataFrame, broadcast_cover):
     return F.broadcast(cover) if broadcast_cover else cover
 
 
-# MRU-1 slot for pip_join's auto-mode probe cover (see pip_join)
+# MRU-1 slot for the auto-mode probe cover (see _probe_cached_cover)
 _LAST_PROBE_COVER = None
 
 
@@ -85,10 +100,10 @@ def _probe_cached_cover(cover: DataFrame):
     """Cache a just-built cover, then run the auto broadcast probe over
     the CACHED frame — without this the probe job computes the cover
     UDF once and the join recomputes it (measured as a full extra
-    Python cover scan in dwithin/veg_factors auto mode). Returns
-    (cached cover, fits_broadcast). MRU-1 release as in pip_join: the
-    previous auto-mode probe cover is unpersisted on the next call (a
-    still-pending earlier result simply recomputes its cover)."""
+    Python cover scan in pip/dwithin/veg_factors auto mode). Returns
+    (cached cover, fits_broadcast). Joins are lazy, so MRU-1 release:
+    the next call unpersists this cover (a still-pending earlier result
+    simply recomputes its cover)."""
     global _LAST_PROBE_COVER
     if _LAST_PROBE_COVER is not None:
         _LAST_PROBE_COVER.unpersist(blocking=False)
@@ -210,7 +225,7 @@ def _refine_schema(extra_cols):
 
 # a straggler frontier at or below this many points is cheap to broadcast
 # as the SMALL side of the final exact cross join (~40 B/point -> ~2 MB);
-# above it, ring doubling keeps shrinking the frontier first
+# above it, the kNN ring loop keeps shrinking the frontier first
 STRAGGLER_DIRECT_MAX = 50_000
 
 # skip remaining ring rounds and finish pending points exactly when the
@@ -252,26 +267,14 @@ def pip_join(points: DataFrame, polys: DataFrame = None,
         if broadcast_cover is None:
             broadcast_cover = _cover_fits_broadcast(cover)
     elif broadcast_cover is None:
-        # cache the unclipped cover for the probe: if the decision is
-        # "broadcast" the cached rows are reused as the real build side
-        # (no second cover computation). The returned frame is lazy, so
-        # there is no safe release point INSIDE this call — instead the
-        # NEXT auto-mode call releases the previous probe cover (MRU-1:
-        # the leak is bounded to one cached cover per session instead
-        # of one per call; a still-pending earlier result simply
-        # recomputes its cover if collected after that).
-        global _LAST_PROBE_COVER
-        if _LAST_PROBE_COVER is not None:
-            _LAST_PROBE_COVER.unpersist(blocking=False)
-        probe_cover = polygon_cover(polys, cell_m).cache()
-        _LAST_PROBE_COVER = probe_cover
-        broadcast_cover = _cover_fits_broadcast(probe_cover)
-        if broadcast_cover:
-            cover = probe_cover
-        else:
+        # probe the unclipped cover: if the decision is "broadcast" its
+        # cached rows are the real build side (no second cover
+        # computation)
+        cover, broadcast_cover = _probe_cached_cover(
+            polygon_cover(polys, cell_m))
+        if not broadcast_cover:
             # the cached probe served only the byte estimate here
-            probe_cover.unpersist(blocking=False)
-            _LAST_PROBE_COVER = None
+            cover.unpersist(blocking=False)
             cover = polygon_cover(polys, cell_m, clip=True)
     else:
         cover = polygon_cover(polys, cell_m, clip=not broadcast_cover)
@@ -393,12 +396,13 @@ def _topk_per_addr(scored: DataFrame, out_schema, k: int) -> DataFrame:
 
 def _clamped_annulus(unresolved: DataFrame, r: int, prev: int,
                      cov_bounds) -> DataFrame:
-    """Probe cells for one ring-doubling round: Chebyshev annulus
-    (prev, r] around each point's cell, CLAMPED to the cover's cell
-    bounding box ``cov_bounds`` (gx0/gx1/gy0/gy1). Generated row volume is
-    bounded by min(annulus, cover-bbox window) per point — a far-frontier
-    sparse world pays O(cover extent), never O(r^2). Pure column
-    explode(sequence): plan size O(1) in r."""
+    """Probe cells for one kNN ring round: Chebyshev annulus
+    (prev, r] around each point's cell (prev=-1 includes the point's own
+    cell), CLAMPED to the cover's cell bounding box ``cov_bounds``
+    (gx0/gx1/gy0/gy1). Generated row volume is bounded by min(annulus,
+    cover-bbox window) per point — a far-frontier sparse world pays
+    O(cover extent), never O(r^2). Pure column explode(sequence): plan
+    size O(1) in r."""
     pgx = F.expr("cell_id DIV 1048576")
     pgy = F.expr("cell_id % 1048576")
 
@@ -436,23 +440,20 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
     data_prep/vegetation/xx_fiona_testing.py:203-227; the reference is
     k=1, :212 — k>1 serves the veg_factors/ANN consumers).
 
-    Ring-expansion: examine cover cells at Chebyshev ring r around each
-    unresolved point; a point resolves once it holds k candidates AND
-    its k-th-best distance <= (r * cell_m), the lower bound on anything
-    in ring > r. k>1 output carries ``nn_rank`` (1..k); k=1 output is
-    unchanged (no rank column, argmin hash-aggregate path).
+    Ring expansion: round r probes the cover cells in Chebyshev annulus
+    (prev, r] around each unresolved point; a point resolves once it
+    holds k candidates AND its k-th-best distance <= (r * cell_m), the
+    lower bound on anything in ring > r. Small inputs and small pending
+    tails finish in one partial-top-k pass. k>1 output carries
+    ``nn_rank`` (1..k); k=1 output has no rank column.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if max_ring < 1:
-        # max_ring=0 would pin the straggler ring-doubling at r=0
-        # forever (prev*2 never grows) — an infinite driver loop
+        # max_ring=0 would pin the ring doubling at r=0 forever
         raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     spark = points.sparkSession
     own_cover = cover is None
-    # one count of the probe side up front (pre-shuffle plan) replaces a
-    # full anti-join isEmpty scan of it per ring round below
-    n_pts = points.count()
 
     out_schema = StructType([
         StructField("addr_id", StringType(), False),
@@ -478,14 +479,24 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
                             F.col("near_x"), F.col("near_y")))
 
     def _empty():
-        # no polygons at all: there is no nearest neighbour to find, and
-        # the straggler ring-doubling below could never terminate
+        # no points or no polygons: nothing to find, and the ring loop
+        # below has no bbox to stop at
         empty_schema = out_schema if k == 1 else StructType(
             out_schema.fields + [StructField("nn_rank", LongType(),
                                              False)])
         return with_line(spark.createDataFrame([], empty_schema))
 
     rank_cols = ["nn_rank"] if k > 1 else []
+
+    # one job over the probe side up front: its count (the loop counts
+    # resolved rows against it instead of re-scanning the frontier each
+    # round) and its cell bbox (with the cover's, the ring radius that
+    # has probed every cover cell for every point)
+    pstats = with_cell(points, cell_m).agg(
+        F.count("*").alias("n"), *_cell_bbox()).collect()[0]
+    n_pts = pstats.n
+    if n_pts == 0:
+        return _empty()
 
     # direct-mode pre-check WITHOUT building the cell cover: when the
     # whole point set fits the frontier cap and points x polygons is
@@ -502,7 +513,6 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
         go_direct = (pprobe.n <= AUTO_BROADCAST_MAX_COVER_ROWS
                      and n_pts * pprobe.n <= DIRECT_PAIR_BUDGET)
 
-    n_cover = None
     k_eff = 1
     if not go_direct:
         # cache only a cover built HERE: a caller-passed cover
@@ -511,31 +521,27 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
         # cover per call in index-once-probe-many sessions
         if own_cover:
             cover = polygon_cover(polys, cell_m).cache()
-        # ONE capped probe job over the (tiny vs points) cover feeds
-        # the broadcast decision, the emptiness check AND (when under
-        # the cap, where it is exact) the straggler pair budget —
-        # replacing the three separate jobs (_cover_fits_broadcast,
-        # limit(1).count, cover.count) this loop used to run before
-        # its first ring round
-        probe = (cover.limit(AUTO_BROADCAST_MAX_COVER_ROWS + 1)
-                 .agg(F.count("*").alias("n"),
-                      F.avg(F.length("wkt")).alias("w")).collect()[0])
+        cstats, fits = _probe_cover(cover)
         if broadcast_cover is None:
-            est = probe.n * ((probe.w or 0.0) + _WKT_ROW_OVERHEAD_B)
-            broadcast_cover = (probe.n <= AUTO_BROADCAST_MAX_COVER_ROWS
-                               and est <= AUTO_BROADCAST_MAX_COVER_BYTES)
+            broadcast_cover = fits
         cover_b = F.broadcast(cover) if broadcast_cover else cover
-        if probe.n == 0:
+        if cstats.n == 0:
             return _empty()
-        # the capped probe count is exact when under the cap; above it
-        # the budget check lazily runs the real count (giant covers)
-        n_cover = int(probe.n) \
-            if probe.n <= AUTO_BROADCAST_MAX_COVER_ROWS else None
+        if cstats.n > AUTO_BROADCAST_MAX_COVER_ROWS:
+            # the capped probe saw a prefix only (giant covers)
+            cstats = cover.agg(F.count("*").alias("n"),
+                               *_cell_bbox()).collect()[0]
+        n_cover = cstats.n
+        # Chebyshev ring (in cells) that reaches every cover cell from
+        # every point: the farthest pair of point-bbox and cover-bbox
+        # edges per axis
+        need = max(cstats.gx1 - pstats.gx0, pstats.gx1 - cstats.gx0,
+                   cstats.gy1 - pstats.gy0, pstats.gy1 - cstats.gy0)
         # a point can only ever find min(k, #polygons) neighbours
         k_eff = 1 if k == 1 else min(k, cover.select("veg_id")
                                      .distinct().count())
-        pts = _spread(with_cell(points, cell_m)
-                      .select("addr_id", "x", "y", "cell_id"))
+        unresolved = with_cell(points, cell_m) \
+            .select("addr_id", "x", "y", "cell_id")
 
     def split_resolved(best: DataFrame, bound: float):
         """(done rows, pending rows, done addr ids) under the ring
@@ -584,156 +590,68 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
 
         return cand.mapInPandas(refine, schema=out_schema)
 
-    # batched ring schedule: the first round probes the whole disk out to
-    # ring 2 (resolves the typical point in one job), later rounds probe
-    # widening annuli; localCheckpoint truncates lineage so the iterative
-    # plan can't blow up. The geometric widening matters: collapsing to
-    # (3, max) was measured 2.3x SLOWER at sf0.1 — the resolve bound is
-    # r*cell_m, so far-from-cover points survive a wide first ring and
-    # then explode the (max_ring)^2-offset annulus.
-    rounds = sorted({min(r, max_ring) for r in (2, 8, max_ring)})
+    # ring radii: the first round probes the whole disk out to ring 2
+    # (resolves the typical point in one job), later rounds widen
+    # geometrically. Collapsing the schedule to (3, max) was measured
+    # 2.3x SLOWER at sf0.1: the resolve bound is r*cell_m, so
+    # far-from-cover points survive a wide first ring and then explode
+    # the (max_ring)^2-offset annulus. Past max_ring the radius doubles;
+    # clamping each annulus to the cover bbox keeps a far point's probe
+    # rows O(cover extent), never O(r^2).
+    radii = chain(sorted({min(r, max_ring) for r in (2, 8, max_ring)}),
+                  (max_ring << i for i in count(1)))
 
     resolved_parts = []
-    unresolved = pts if not go_direct else None
-    best_so_far = None  # best candidate per addr so far (may not be final)
+    best_so_far = None  # best candidates per pending addr so far
     n_resolved = 0
     n_par = spark.sparkContext.defaultParallelism
     prev = -1
-    for r in rounds if not go_direct else []:
-        if best_so_far is not None:
-            # later-round frontiers sit behind an anti-join whose tiny
-            # shuffle AQE coalesces to ONE partition; without a re-spread
-            # the annulus explode (hundreds of offsets per point) and its
-            # refine UDF would run as a single task (measured 6x on the
-            # whole join at sf0.1). This holds for BOTH cover strategies:
-            # AQE coalesces the shuffle-cover join's output by bytes too,
-            # so skipping the re-spread there was measured 6x slower —
-            # don't "optimize" this away.
-            unresolved = unresolved.repartition(n_par)
-        offs = [(dx, dy) for dx in range(-r, r + 1)
-                for dy in range(-r, r + 1)
-                if prev < max(abs(dx), abs(dy)) <= r]
-        offs_col = F.array(*[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in offs])
-        ring_cells = unresolved.select(
-            "addr_id", "x", "y", "cell_id",
-            F.explode(offs_col).alias("o")
-        ).select(
-            "addr_id", "x", "y",
-            (F.col("cell_id") + F.col("o.dx") * F.lit(1 << 20)
-             + F.col("o.dy")).alias("probe_cell"))
-
-        cand = ring_cells.join(
+    for r in radii if not go_direct else ():
+        # spread the frontier every round: a single-file point scan, and
+        # later the anti-join whose tiny shuffle AQE coalesces to ONE
+        # partition, would run the annulus explode and its refine UDF as
+        # a single task (measured 6x on the whole join at sf0.1, for BOTH
+        # cover strategies — don't "optimize" this away)
+        unresolved = _spread(unresolved)
+        cand = _clamped_annulus(unresolved, r, prev, cstats).join(
             cover_b.withColumnRenamed("cell_id", "probe_cell"), "probe_cell")
         scored = best_candidates(cand)
         if best_so_far is not None:
             scored = scored.unionByName(best_so_far.drop(*rank_cols))
+        # localCheckpoint truncates lineage so the iterative plan stays
+        # O(#rounds) deep
         best = _topk_per_addr(scored, out_schema, k).localCheckpoint(
             eager=True)
-
-        bound = r * cell_m
-        done, pending, done_addrs = split_resolved(best, bound)
-        resolved_parts.append(done)
-        # loop-termination accounting reads the (tiny, per-addr) checkpointed
-        # `best`, NOT the probe side: on a 14M-address run the old
-        # unresolved.isEmpty() re-scanned + anti-joined the full probe set
-        # every round (plus a second localCheckpoint barrier); counting the
-        # newly-resolved rows against the upfront probe count costs one
-        # cheap filter-job over the checkpoint instead. Assumes addr_id is
-        # unique on the probe side (already required by the per-addr argmin).
-        n_resolved += done_addrs.count()
         prev = r
-        if n_resolved >= n_pts:
-            best_so_far = None
-            break
-        # anti-join: drop resolved points from the frontier. `done` is
-        # checkpointed, so the frontier plan stays O(#rounds) deep without
-        # materializing its own checkpoint barrier per round.
-        unresolved = unresolved.join(done_addrs, "addr_id", "left_anti")
-        best_so_far = pending
-        # early exact finish: when the pending tail is small enough that
-        # the distributed cross join is cheaper than another ring round,
-        # stop ringing (falls through to the final exact pass below)
-        pending_n = n_pts - n_resolved
-        if pending_n <= STRAGGLER_DIRECT_MAX:
-            if n_cover is None:
-                n_cover = cover.count()
-            if pending_n * n_cover <= DIRECT_PAIR_BUDGET:
-                break
-    # ring budget exhausted. NEVER broadcast the polygon set to finish
-    # the stragglers (9.4M full-WKT rows replicated per executor kills
-    # the driver on a pathological far-from-everything point set).
-    # Instead: (1) while the frontier is too big to be a broadcast small
-    # side itself, keep DOUBLING the ring with column-generated annuli
-    # (explode(sequence) x2 — plan size O(1) however wide the ring, unlike
-    # the literal offset arrays of the scheduled rounds) joined against
-    # the distributed cover; (2) once the frontier is small, finish it
-    # exactly with a cross join that broadcasts the SMALL (point) side and
-    # streams the polygon partitions.
-    #
-    # Each annulus is CLAMPED to the cover's cell bounding box: dx/dy
-    # sequences only span offsets that can land on a cover cell, so a
-    # sparse world costs O(cover extent) generated rows per point instead
-    # of O(r^2) — at r=512 an unclamped annulus is ~1M rows per pending
-    # point, all doomed to miss the join. Once r reaches every pending
-    # point's farthest cover-bbox corner, EVERY cover cell has been
-    # probed cumulatively (clamping only ever dropped coverless cells),
-    # so the pending bests are exact and resolve unconditionally — the
-    # clamp cannot starve termination.
-    cov_bounds = None
-    need = None
-    while (best_so_far is not None and n_resolved < n_pts
-           and (n_pts - n_resolved) > STRAGGLER_DIRECT_MAX):
-        if cov_bounds is None:
-            cov_bounds = cover.agg(
-                F.min(F.expr("cell_id DIV 1048576")).alias("gx0"),
-                F.max(F.expr("cell_id DIV 1048576")).alias("gx1"),
-                F.min(F.expr("cell_id % 1048576")).alias("gy0"),
-                F.max(F.expr("cell_id % 1048576")).alias("gy1")).collect()[0]
-            # farthest cover-bbox corner over the loop-entry frontier
-            # (cells, Chebyshev) — a conservative bound for every LATER
-            # frontier too (they are subsets), so one agg suffices
-            pgx = F.expr("cell_id DIV 1048576")
-            pgy = F.expr("cell_id % 1048576")
-            need = unresolved.agg(F.max(F.greatest(
-                F.abs(F.lit(cov_bounds.gx0) - pgx),
-                F.abs(F.lit(cov_bounds.gx1) - pgx),
-                F.abs(F.lit(cov_bounds.gy0) - pgy),
-                F.abs(F.lit(cov_bounds.gy1) - pgy)))).collect()[0][0]
-        r = prev * 2
-        unresolved = unresolved.repartition(n_par)
-        final_round = need is None or r >= need
-        if need is not None and need <= prev:
-            # every cover cell already probed for every pending point:
-            # the pending bests are exact — no new candidates exist
-            resolved_parts.append(best_so_far)
-            best_so_far = None
-            break
-
-        ann = _clamped_annulus(unresolved, r, prev, cov_bounds)
-        cand = ann.join(
-            cover_b.withColumnRenamed("cell_id", "probe_cell"),
-            "probe_cell")
-        scored = best_candidates(cand) \
-            .unionByName(best_so_far.drop(*rank_cols))
-        best = _topk_per_addr(scored, out_schema, k).localCheckpoint(
-            eager=True)
-        if final_round:
-            # window now spans the whole cover bbox for every pending
-            # point: bests are exact regardless of the ring bound
+        if r >= need:
+            # every cover cell has now been probed for every pending
+            # point (clamping only ever dropped coverless cells): the
+            # bests are exact whatever the ring bound says
             resolved_parts.append(best)
             best_so_far = None
             break
-        bound = r * cell_m
-        done, pending, done_addrs = split_resolved(best, bound)
+        done, pending, done_addrs = split_resolved(best, r * cell_m)
         resolved_parts.append(done)
+        # counting the newly resolved addrs of the (tiny, per-addr)
+        # checkpoint replaces an isEmpty() over the probe side, which
+        # re-scanned and anti-joined the full frontier every round.
+        # Assumes addr_id is unique on the probe side.
         n_resolved += done_addrs.count()
-        unresolved = unresolved.join(done_addrs, "addr_id", "left_anti")
-        best_so_far = pending
-        prev = r
         if n_resolved >= n_pts:
             best_so_far = None
+            break
+        unresolved = unresolved.join(done_addrs, "addr_id", "left_anti")
+        best_so_far = pending
+        # a small pending tail finishes exactly once the ring budget is
+        # spent, or earlier when the cross join (pending x cover rows,
+        # an upper bound on pending x polygons) is cheaper than another
+        # round's fixed-latency jobs. A large one keeps ringing: the
+        # finish broadcasts the points, and broadcasting the polygons
+        # instead (9.4M full-WKT rows per executor) kills the driver.
+        pending_n = n_pts - n_resolved
+        if pending_n <= STRAGGLER_DIRECT_MAX and (
+                r >= max_ring or pending_n * n_cover <= DIRECT_PAIR_BUDGET):
+            break
     if go_direct or best_so_far is not None:
         # finish the pending tail exactly WITHOUT materializing the
         # (frontier x polygons) pair rows: a cross join ships every

@@ -2,9 +2,11 @@
 oracle, and the Spark plan's column names must equal the oracle SQL's
 output names (the driver's value-hash sorts columns by name, so a naming
 drift fails the gate even when values match). Names only — the bit-exact
-value comparison lives in tools/check_oracles.py and the driver's gate."""
+value comparison lives in tools/check_oracles.py and the driver's gate.
+Also the input row-count memo the derived-world queries size themselves by."""
 
 import duckdb
+import pandas as pd
 import pytest
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
@@ -62,3 +64,15 @@ def test_composite_oracles_inside_driver_window(contract):
     assert all(k in oracles for k in window)
     # oracle dict ordering must mirror query ordering (the driver zips)
     assert list(oracles) == [k for k in queries if k in oracles]
+
+
+def test_tcount_recounts_a_rewritten_input(spark, tmp_path):
+    """The input row-count memo is keyed on the parquet file's mtime and
+    size, so an input rewritten in-process is counted afresh."""
+    from balrog_spark import driver_queries as dq
+
+    path = tmp_path / "t.parquet"
+    pd.DataFrame({"a": range(3)}).to_parquet(path)
+    assert dq._tcount(spark, str(tmp_path), "t") == 3
+    pd.DataFrame({"a": range(7)}).to_parquet(path)
+    assert dq._tcount(spark, str(tmp_path), "t") == 7

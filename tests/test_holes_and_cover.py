@@ -209,8 +209,11 @@ def test_knn_straggler_ring_doubling_resolves_far_points(spark, monkeypatch):
     """Verdict corner: ring exhaustion on a NON-broadcast cover must not
     broadcast the polygon set. With the direct-pass threshold pinned to 0
     the engine may ONLY use column-generated ring doubling — it must still
-    terminate and match the exact rectangle-distance answer."""
+    terminate and match the exact rectangle-distance answer. At k=3 every
+    point stays pending until the ring reaches the farthest cover corner,
+    which resolves them all: rows equal the direct run's."""
     sp, sv, exp = _far_fixture(spark)
+    direct3 = joins.knn_join(sp, sv, k=3).toPandas()
     monkeypatch.setattr(joins, "STRAGGLER_DIRECT_MAX", 0)
     got = joins.knn_join(sp, sv, max_ring=1,
                          broadcast_cover=False).toPandas()
@@ -218,6 +221,15 @@ def test_knn_straggler_ring_doubling_resolves_far_points(spark, monkeypatch):
     for r in got.itertuples():
         ed, ev = exp[r.addr_id]
         assert r.veg_id == ev and abs(r.distance_m - ed) < 1e-9
+
+    got3 = joins.knn_join(sp, sv, max_ring=1, broadcast_cover=False,
+                          k=3).toPandas()
+    assert len(direct3) == 3 * len(exp)
+
+    def canon(df):
+        return df.sort_values(["addr_id", "nn_rank"]).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(canon(got3), canon(direct3))
 
 
 def test_knn_straggler_cross_pass_broadcasts_points_not_polygons(spark):

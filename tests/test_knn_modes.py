@@ -1,8 +1,8 @@
-"""The r6 knn_join rewrite added a direct (cover-less partial-top-k)
-mode chosen by a pair budget, alongside the scheduled-ring and
-ring-doubling + straggler-finish paths. All modes must produce
-identical rows — the mode cutover is a pure performance decision, so a
-scale change (which flips the budget) must never change results."""
+"""knn_join runs a direct (cover-less partial-top-k) pass when a pair
+budget allows, and otherwise one ring loop whose small pending tail
+goes to the same partial-top-k finish. Every size-threshold branch must
+produce identical rows — the cutover is a pure performance decision, so
+a scale change (which flips the budget) must never change results."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -80,13 +80,13 @@ def test_knn_modes_identical(world, k, monkeypatch):
     direct = _canon(joins.knn_join(pts, polys, max_ring=8, k=k), k)
     assert len(direct) == 300 * k
 
-    # scheduled-ring path: fail the pre-round budget
+    # ring loop up to max_ring: fail the pre-round budget
     monkeypatch.setattr(joins, "DIRECT_PAIR_BUDGET", 1)
     ring = _canon(joins.knn_join(pts, polys, max_ring=8, k=k), k)
     assert ring == direct
 
-    # ring-doubling + partial-top-k straggler finish: tiny max_ring and
-    # a frontier cap below the point count force the post-loop paths
+    # ring loop past max_ring (doubling) + partial-top-k finish: tiny
+    # max_ring and a frontier cap below the point count force both
     monkeypatch.setattr(joins, "DIRECT_PAIR_BUDGET", 10**4)
     monkeypatch.setattr(joins, "STRAGGLER_DIRECT_MAX", 50)
     doubling = _canon(joins.knn_join(pts, polys, max_ring=1, k=k), k)
