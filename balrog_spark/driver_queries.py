@@ -471,6 +471,43 @@ _RADC = 0.01745329251994329576923690768489
 _GRID_W = 100
 
 
+def _dem_z(r, c):
+    """The events grid's closed-form DEM (the r4 oracle's z)."""
+    return 300.0 + 150.0 * np.sin(c * 0.21) * np.cos(r * 0.17)
+
+
+def _events_rc(spark, sf_dir) -> DataFrame:
+    """The events grid as (r, c) cells, _GRID_W columns per row."""
+    return _load(spark, sf_dir, "events").selectExpr(
+        f"event_id DIV {_GRID_W} AS r", f"event_id % {_GRID_W} AS c")
+
+
+def _pack_grid_tiles(ev: DataFrame, n_ty: int, TR: int, TC: int,
+                     px: float, layer: str, values) -> DataFrame:
+    """Pack events-grid cells ``ev`` (columns r, c) into (TR x TC)-px
+    ``layer`` tiles of schema.TILES (row 0 north, tile_y counted from the
+    SOUTH over ``n_ty`` tile rows). Each tile fills ``values(r, c)`` in
+    float64, then casts to the production float32."""
+    from .schema import TILES
+
+    def pack(key, pdf: pd.DataFrame):
+        tx, ty = int(key[0]), int(key[1])
+        r, c = pdf.r.values, pdf.c.values
+        arr = np.zeros((TR, TC), dtype=np.float64)
+        arr[(r % TR).astype(int), (c % TC).astype(int)] = values(r, c)
+        return pd.DataFrame([{
+            "media_ref": f"{layer}/{tx}/{ty}", "layer": layer,
+            "tile_x": tx, "tile_y": ty,
+            "x0": tx * TC * px, "y0": ty * TR * px, "pixel_m": px,
+            "nrows": TR, "ncols": TC,
+            "data": arr.astype(np.float32).ravel()}])
+
+    return ev.groupBy(
+        (F.col("c") / TC).cast("int").alias("_tx"),
+        (F.lit(n_ty - 1) - (F.col("r") / TR).cast("int")).alias("_ty")) \
+        .applyInPandas(pack, schema=TILES)
+
+
 @q("r4_slope_aspect", f"""
 WITH grid AS (
   SELECT event_id, event_id // {_GRID_W} AS r, event_id % {_GRID_W} AS c,
@@ -574,53 +611,14 @@ def r4_slope_aspect_tiled(spark, sf_dir):
     exchange, per-tile halo assembly — so the correctness gate exercises
     the same plan the 100-TB pipeline runs (the single-group
     r4_slope_aspect twin remains as the kernel-only oracle)."""
-    from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
-                                   IntegerType, StringType, StructField,
-                                   StructType)
-
     from . import raster as raster_mod
 
-    ev = _load(spark, sf_dir, "events").selectExpr(
-        f"event_id DIV {_GRID_W} AS r",
-        f"event_id % {_GRID_W} AS c")
+    ev = _events_rc(spark, sf_dir)
     n_rows = _tcount(spark, sf_dir, "events") // _GRID_W
     TR, TC = 10, 25
     n_ty = max(n_rows // TR, 1)
     TR = n_rows // n_ty
-    px = 25.0
-
-    tile_schema = StructType([
-        StructField("media_ref", StringType(), False),
-        StructField("layer", StringType(), False),
-        StructField("tile_x", IntegerType(), False),
-        StructField("tile_y", IntegerType(), False),
-        StructField("x0", DoubleType(), False),
-        StructField("y0", DoubleType(), False),
-        StructField("pixel_m", DoubleType(), False),
-        StructField("nrows", IntegerType(), False),
-        StructField("ncols", IntegerType(), False),
-        StructField("data", ArrayType(FloatType()), False)])
-
-    def pack(key, pdf: pd.DataFrame):
-        tx, ty = int(key[0]), int(key[1])
-        arr = np.zeros((TR, TC), dtype=np.float64)
-        lr = (pdf.r.values % TR).astype(int)
-        lc = (pdf.c.values % TC).astype(int)
-        arr[lr, lc] = (300.0 + 150.0 * np.sin(pdf.c.values * 0.21)
-                       * np.cos(pdf.r.values * 0.17))
-        return pd.DataFrame([{
-            "media_ref": f"dem/{tx}/{ty}", "layer": "dem",
-            "tile_x": tx, "tile_y": ty,
-            "x0": tx * TC * px, "y0": ty * TR * px, "pixel_m": px,
-            "nrows": TR, "ncols": TC,
-            "data": arr.astype(np.float32).ravel()}])
-
-    # tile_y counts from the SOUTH (larger ty = smaller grid row r)
-    tiles = ev.groupBy(
-        (F.col("c") / TC).cast("int").alias("_tx"),
-        (F.lit(n_ty - 1) - (F.col("r") / TR).cast("int")).alias("_ty")) \
-        .applyInPandas(pack, schema=tile_schema)
-
+    tiles = _pack_grid_tiles(ev, n_ty, TR, TC, 25.0, "dem", _dem_z)
     sa = raster_mod.slope_aspect_tiles(tiles, halo=2, classify=True)
     cells_df = sa.select(
         "layer", "tile_x", "tile_y",
@@ -658,56 +656,19 @@ def s10_regrid(spark, sf_dir):
     raster.regrid_tiles (the per-tile warp analogue; reference:
     data_prep/images/ga_5m/01_mosaic...py:245-266), tiles re-exploded to
     cells against a SQL group-by twin."""
-    from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
-                                   IntegerType, StringType, StructField,
-                                   StructType)
-
     from . import raster as raster_mod
 
-    ev = _load(spark, sf_dir, "events").selectExpr(
-        f"event_id DIV {_GRID_W} AS r",
-        f"event_id % {_GRID_W} AS c")
+    ev = _events_rc(spark, sf_dir)
     n_rows = _tcount(spark, sf_dir, "events") // _GRID_W
     TR, TC = 10, 20  # both EVEN: factor-2 regrid must not truncate
     n_ty = max(n_rows // TR, 1)
     TR = n_rows // n_ty
-    px = 25.0
-
-    tile_schema = StructType([
-        StructField("media_ref", StringType(), False),
-        StructField("layer", StringType(), False),
-        StructField("tile_x", IntegerType(), False),
-        StructField("tile_y", IntegerType(), False),
-        StructField("x0", DoubleType(), False),
-        StructField("y0", DoubleType(), False),
-        StructField("pixel_m", DoubleType(), False),
-        StructField("nrows", IntegerType(), False),
-        StructField("ncols", IntegerType(), False),
-        StructField("data", ArrayType(FloatType()), False)])
-
-    def pack(key, pdf: pd.DataFrame):
-        tx, ty = int(key[0]), int(key[1])
-        arr = np.zeros((TR, TC), dtype=np.float64)
-        lr = (pdf.r.values % TR).astype(int)
-        lc = (pdf.c.values % TC).astype(int)
-        arr[lr, lc] = (300.0 + 150.0 * np.sin(pdf.c.values * 0.21)
-                       * np.cos(pdf.r.values * 0.17))
-        return pd.DataFrame([{
-            "media_ref": f"dem/{tx}/{ty}", "layer": "dem",
-            "tile_x": tx, "tile_y": ty,
-            "x0": tx * TC * px, "y0": ty * TR * px, "pixel_m": px,
-            "nrows": TR, "ncols": TC,
-            # tile data is float32 (production schema); the oracle casts
-            # z to REAL the same way. The 2x2 block mean is EXACT in
-            # float64 regardless of summation order (4 x 24-bit mantissas
-            # fit 26 bits), so the engine's float32 output equals the
-            # oracle's avg-then-REAL bit-for-bit
-            "data": arr.astype(np.float32).ravel()}])
-
-    tiles = ev.groupBy(
-        (F.col("c") / TC).cast("int").alias("_tx"),
-        (F.lit(n_ty - 1) - (F.col("r") / TR).cast("int")).alias("_ty")) \
-        .applyInPandas(pack, schema=tile_schema)
+    # tile data is float32 (production schema); the oracle casts z to
+    # REAL the same way. The 2x2 block mean is EXACT in float64
+    # regardless of summation order (4 x 24-bit mantissas fit 26 bits),
+    # so the engine's float32 output equals the oracle's avg-then-REAL
+    # bit-for-bit
+    tiles = _pack_grid_tiles(ev, n_ty, TR, TC, 25.0, "dem", _dem_z)
     rg = raster_mod.regrid_tiles(tiles, factor=2)
     cells_df = rg.select("tile_x", "tile_y", "ncols",
                          F.posexplode("data").alias("i", "v"))
@@ -2393,57 +2354,23 @@ def v10_dwithin_holes(spark, sf_dir):
                       .alias("distance_m"))
 
 
-def _events_class_tiles(spark, sf_dir, TR=10, TC=25, px=25.0,
-                        two_class=False):
-    """Pack the events grid into (TR x TC)-px 'veg' class tiles. Default
+def _events_class_tiles(spark, sf_dir, two_class=False):
+    """Pack the events grid into ~10x25-px 'veg' class tiles. Default
     class v = ((r//3) + (c//4)) % 3 + 1 (diagonal 3x4 bands so runs cross
     both tile borders). ``two_class`` folds bands 2 and 3 together
     (v = 1 where the band index is 0, else 2), which chains class-2 blocks
     into large snaking regions — multi-rect components that force several
     label-propagation rounds. Returns (tiles_df, n_rows)."""
-    from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
-                                   IntegerType, StringType, StructField,
-                                   StructType)
-
-    ev = _load(spark, sf_dir, "events").selectExpr(
-        "event_id", f"event_id DIV {_GRID_W} AS r",
-        f"event_id % {_GRID_W} AS c")
+    ev = _events_rc(spark, sf_dir)
     n_rows = _tcount(spark, sf_dir, "events") // _GRID_W
-    n_ty = max(n_rows // TR, 1)
-    TR = n_rows // n_ty
+    n_ty = max(n_rows // 10, 1)
 
-    tile_schema = StructType([
-        StructField("media_ref", StringType(), False),
-        StructField("layer", StringType(), False),
-        StructField("tile_x", IntegerType(), False),
-        StructField("tile_y", IntegerType(), False),
-        StructField("x0", DoubleType(), False),
-        StructField("y0", DoubleType(), False),
-        StructField("pixel_m", DoubleType(), False),
-        StructField("nrows", IntegerType(), False),
-        StructField("ncols", IntegerType(), False),
-        StructField("data", ArrayType(FloatType()), False)])
+    def veg_class(r, c):
+        band = (r // 3 + c // 4) % 3
+        return np.where(band == 0, 1, 2) if two_class else band + 1
 
-    def pack(key, pdf: pd.DataFrame):
-        tx, ty = int(key[0]), int(key[1])
-        arr = np.zeros((TR, TC), dtype=np.float64)
-        lr = (pdf.r.values % TR).astype(int)
-        lc = (pdf.c.values % TC).astype(int)
-        band = (pdf.r.values // 3 + pdf.c.values // 4) % 3
-        arr[lr, lc] = np.where(band == 0, 1, 2) if two_class else band + 1
-        return pd.DataFrame([{
-            "media_ref": f"veg/{tx}/{ty}", "layer": "veg",
-            "tile_x": tx, "tile_y": ty,
-            "x0": tx * TC * px, "y0": ty * TR * px, "pixel_m": px,
-            "nrows": TR, "ncols": TC,
-            "data": arr.astype(np.float32).ravel()}])
-
-    # tile_y counts from the SOUTH (larger ty = smaller grid row r)
-    tiles = ev.groupBy(
-        (F.col("c") / TC).cast("int").alias("_tx"),
-        (F.lit(n_ty - 1) - (F.col("r") / TR).cast("int")).alias("_ty")) \
-        .applyInPandas(pack, schema=tile_schema)
-    return tiles, n_rows
+    return _pack_grid_tiles(ev, n_ty, n_rows // n_ty, 25, 25.0, "veg",
+                            veg_class), n_rows
 
 
 @q("r14_polygonize", f"""
@@ -2817,12 +2744,9 @@ def _flag_engine_tile_px(R: int) -> int:
 
 def _flag_dem_tiles(spark, sf_dir):
     """Pack the events grid's closed-form DEM (z = 300 + 150 sin(.21c)
-    cos(.17r)) into square 10x10-px float32 'dem' tiles — the same tile
-    convention corpus tiles use (row 0 north, tile_y from the south)."""
-    from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
-                                   IntegerType, StringType, StructField,
-                                   StructType)
-
+    cos(.17r)) into square float32 'dem' tiles of the engine's tile side
+    — the same tile convention corpus tiles use (row 0 north, tile_y
+    from the south)."""
     R = _tcount(spark, sf_dir, "events") // _GRID_W
     # raster extent pinned by the ORACLE's tile constant (10); the pack
     # side T is the engine's own choice (see _flag_engine_tile_px)
@@ -2831,40 +2755,8 @@ def _flag_dem_tiles(spark, sf_dir):
     n_ty = used // T
     # project to (r, c) before the opaque pack: applyInPandas ships
     # every input column, and event_id is never read inside
-    ev = _load(spark, sf_dir, "events").selectExpr(
-        f"event_id DIV {_GRID_W} AS r",
-        f"event_id % {_GRID_W} AS c").filter(F.col("r") < used)
-
-    tile_schema = StructType([
-        StructField("media_ref", StringType(), False),
-        StructField("layer", StringType(), False),
-        StructField("tile_x", IntegerType(), False),
-        StructField("tile_y", IntegerType(), False),
-        StructField("x0", DoubleType(), False),
-        StructField("y0", DoubleType(), False),
-        StructField("pixel_m", DoubleType(), False),
-        StructField("nrows", IntegerType(), False),
-        StructField("ncols", IntegerType(), False),
-        StructField("data", ArrayType(FloatType()), False)])
-
-    def pack(key, pdf: pd.DataFrame):
-        tx, ty = int(key[0]), int(key[1])
-        arr = np.zeros((T, T), dtype=np.float64)
-        lr = (pdf.r.values % T).astype(int)
-        lc = (pdf.c.values % T).astype(int)
-        arr[lr, lc] = (300.0 + 150.0 * np.sin(pdf.c.values * 0.21)
-                       * np.cos(pdf.r.values * 0.17))
-        return pd.DataFrame([{
-            "media_ref": f"dem/{tx}/{ty}", "layer": "dem",
-            "tile_x": tx, "tile_y": ty,
-            "x0": tx * T * 25.0, "y0": ty * T * 25.0, "pixel_m": 25.0,
-            "nrows": T, "ncols": T,
-            "data": arr.astype(np.float32).ravel()}])
-
-    return ev.groupBy(
-        (F.col("c") / T).cast("int").alias("_tx"),
-        (F.lit(n_ty - 1) - (F.col("r") / T).cast("int")).alias("_ty")) \
-        .applyInPandas(pack, schema=tile_schema)
+    ev = _events_rc(spark, sf_dir).filter(F.col("r") < used)
+    return _pack_grid_tiles(ev, n_ty, T, T, 25.0, "dem", _dem_z)
 
 
 def _flagship_oracle_sql() -> str:

@@ -4,9 +4,8 @@ Clean-room from the public GIF structure: logical screen descriptor,
 global/local color tables, sub-block framing, LZW image data (LSB-first
 bit packing, variable initial code size, NO early change — the width grows
 when the table reaches 2^bits, capped at 12), 4-pass interlacing, and
-multi-frame animation (one decoded frame per image descriptor — GIF is the
-crawl world's most common animation container, so ``gif_frames`` feeds
-mediaops.sample_frames like MJPEG does).
+multi-frame animation (``gif_frames``: one composited frame per image
+descriptor).
 
 The encoder emits a GIF89a with a global color table built from the
 image's distinct colors (<= 256 required — this is a codec, not a

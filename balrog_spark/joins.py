@@ -80,18 +80,6 @@ def _probe_cover(cover: DataFrame):
     return probe, est <= AUTO_BROADCAST_MAX_COVER_BYTES
 
 
-def _cover_fits_broadcast(cover: DataFrame) -> bool:
-    return _probe_cover(cover)[1]
-
-
-def _maybe_broadcast(cover: DataFrame, broadcast_cover):
-    """broadcast_cover True/False forces the strategy; None = auto by the
-    byte-based estimate above (one lightweight job over the cover side)."""
-    if broadcast_cover is None:
-        broadcast_cover = _cover_fits_broadcast(cover)
-    return F.broadcast(cover) if broadcast_cover else cover
-
-
 # MRU-1 slot for the auto-mode probe cover (see _probe_cached_cover)
 _LAST_PROBE_COVER = None
 
@@ -109,7 +97,7 @@ def _probe_cached_cover(cover: DataFrame):
         _LAST_PROBE_COVER.unpersist(blocking=False)
     cover = cover.cache()
     _LAST_PROBE_COVER = cover
-    return cover, _cover_fits_broadcast(cover)
+    return cover, _probe_cover(cover)[1]
 
 _COVER = StructType([
     StructField("cell_id", LongType(), False),
@@ -245,6 +233,24 @@ def _spread(df: DataFrame, key: str = "addr_id") -> DataFrame:
     return df.repartition(n, key)
 
 
+def _radius_candidates(points: DataFrame, polys: DataFrame,
+                       radius_m: float, cell_m: float,
+                       broadcast_cover: bool | None,
+                       cover: DataFrame | None) -> DataFrame:
+    """Radius-join candidates: the ``radius_m``-padded cover (or a
+    pre-built one saved with that pad), broadcast if forced or if the auto
+    probe says it fits, equi-joined on cell_id with the spread points."""
+    if cover is None:
+        cover = polygon_cover(polys, cell_m, pad_m=radius_m)
+        if broadcast_cover is None:
+            cover, broadcast_cover = _probe_cached_cover(cover)
+    elif broadcast_cover is None:
+        broadcast_cover = _probe_cover(cover)[1]
+    if broadcast_cover:
+        cover = F.broadcast(cover)
+    return _spread(with_cell(points, cell_m)).join(cover, "cell_id")
+
+
 def pip_join(points: DataFrame, polys: DataFrame = None,
              cell_m: float = cells.DEFAULT_CELL_M,
              broadcast_cover: bool | None = None,
@@ -265,7 +271,7 @@ def pip_join(points: DataFrame, polys: DataFrame = None,
     build."""
     if cover is not None:
         if broadcast_cover is None:
-            broadcast_cover = _cover_fits_broadcast(cover)
+            broadcast_cover = _probe_cover(cover)[1]
     elif broadcast_cover is None:
         # probe the unclipped cover: if the decision is "broadcast" its
         # cached rows are the real build side (no second cover
@@ -317,13 +323,8 @@ def dwithin_join(points: DataFrame, polys: DataFrame = None,
     (distance needs the full WKT, so bytes shrink by distribution, not
     clipping). A pre-built ``cover`` (see :func:`save_cover`) MUST have
     been saved with ``pad_m`` equal to this radius."""
-    if cover is None:
-        cover = polygon_cover(polys, cell_m, pad_m=radius_m)
-        if broadcast_cover is None:
-            cover, broadcast_cover = _probe_cached_cover(cover)
-    cover = _maybe_broadcast(cover, broadcast_cover)
-    pts = _spread(with_cell(points, cell_m))
-    cand = pts.join(cover, "cell_id")
+    cand = _radius_candidates(points, polys, radius_m, cell_m,
+                              broadcast_cover, cover)
 
     def refine(batches):
         for pdf in batches:

@@ -2,10 +2,8 @@
 
 Clean-room from the public TIFF 6.0 structure (byte order II/MM, IFD tag
 walk, strip layout): uncompressed, PackBits and LZW compression, 8-bit
-grayscale + RGB, horizontal-differencing predictor. Crawl corpora are full
-of TIFFs, and unlike mp3 (whose ISO Huffman tables are spec data
-unavailable here) every TIFF baseline detail is derivable from structure
-alone, so a real decode replaces the refusal path.
+grayscale + RGB, horizontal-differencing predictor. It is the strip and
+tile codec under :mod:`geotiff`.
 
 TIFF LZW (vs GIF LZW): MSB-first bit packing and the spec's "early change"
 — the code width bumps one code EARLIER than the table size strictly

@@ -87,13 +87,8 @@ def veg_factors(points: DataFrame, polys: DataFrame = None,
 
     ``cover``: a pre-built cover (joins.save_cover) — MUST have been
     saved with ``pad_m`` equal to this radius."""
-    if cover is None:
-        cover = joins.polygon_cover(polys, cell_m, pad_m=radius_m)
-        if broadcast_cover is None:
-            cover, broadcast_cover = joins._probe_cached_cover(cover)
-    cover = joins._maybe_broadcast(cover, broadcast_cover)
-    pts = joins._spread(joins.with_cell(points, cell_m))
-    cand = pts.join(cover, "cell_id")
+    cand = joins._radius_candidates(points, polys, radius_m, cell_m,
+                                    broadcast_cover, cover)
     cols = [f.name for f in VEG_FACTORS_SCHEMA]
 
     # nearest-point reuse bound: a source-part nearest point STRICTLY

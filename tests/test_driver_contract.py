@@ -3,7 +3,12 @@ oracle, and the Spark plan's column names must equal the oracle SQL's
 output names (the driver's value-hash sorts columns by name, so a naming
 drift fails the gate even when values match). Names only — the bit-exact
 value comparison lives in tools/check_oracles.py and the driver's gate.
-Also the input row-count memo the derived-world queries size themselves by."""
+Also the input row-count memo the derived-world queries size themselves by,
+and that every package module is reached from the engine or kept for a
+stated reason."""
+
+import ast
+import pathlib
 
 import duckdb
 import pandas as pd
@@ -76,3 +81,61 @@ def test_tcount_recounts_a_rewritten_input(spark, tmp_path):
     assert dq._tcount(spark, str(tmp_path), "t") == 3
     pd.DataFrame({"a": range(7)}).to_parquet(path)
     assert dq._tcount(spark, str(tmp_path), "t") == 7
+
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "balrog_spark"
+
+# package modules kept whether or not a driver query or benchmark workload
+# imports them, each for a reason of its own; a module that is neither
+# reached nor listed here is dead code
+KEEP = {
+    "geotiff": "tiled GeoTIFF source/sink for national raster layers",
+    "tiffcodec": "TIFF strip codecs under geotiff",
+    "gifcodec": "standalone GIF codec, next to go under ROADMAP item 4",
+    "fgb": "FlatGeobuf vegetation-layer source",
+    "gpkg": "GeoPackage vector source",
+    "shapefile": "shapefile source for masks and extents",
+    "wkbio": "WKB/GeoParquet geometry codec under fgb and gpkg",
+    "serve": "single-address serving path, parity-tested with the pipeline",
+    "streaming": "streaming ingest of document drops",
+    "snapshots": "versioned snapshot log for the streaming sink",
+    "lineage": "per-bucket checkpoint and resume",
+    "reference_impl": "pure-numpy reference the kernels are tested against",
+}
+
+
+def _package_imports(path: pathlib.Path) -> set:
+    """balrog_spark modules imported anywhere in ``path`` (function-level
+    imports included)."""
+    out = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.ImportFrom):
+            mod = node.module or ""
+            if node.level == 1 and mod:
+                out.add(mod.split(".")[0])
+            elif node.level == 1 or mod == "balrog_spark":
+                out.update(a.name for a in node.names)
+            elif mod.startswith("balrog_spark."):
+                out.add(mod.split(".")[1])
+        elif isinstance(node, ast.Import):
+            out.update(a.name.split(".")[1] for a in node.names
+                       if a.name.startswith("balrog_spark."))
+    return {m for m in out if (PKG / f"{m}.py").exists()}
+
+
+def test_every_module_is_reached_or_kept():
+    """Walk the package's imports from driver_queries, __init__ and the
+    modules perfbench imports: every module is reached or kept."""
+    modules = {p.stem for p in PKG.glob("*.py")}
+    todo = {"driver_queries", "__init__"}
+    for p in (ROOT / "perfbench").glob("*.py"):
+        todo |= _package_imports(p)
+    reached = set()
+    while todo:
+        m = todo.pop()
+        if m not in reached:
+            reached.add(m)
+            todo |= _package_imports(PKG / f"{m}.py")
+    assert sorted(set(KEEP) - modules) == []
+    assert sorted(modules - reached - set(KEEP)) == []

@@ -308,9 +308,9 @@ def test_broadcast_threshold_is_byte_based(spark, monkeypatch):
          "x": pts[:, 0], "y": pts[:, 1]}))
 
     cover = joins.polygon_cover(sv)
-    assert joins._cover_fits_broadcast(cover)  # default caps: fits fine
+    assert joins._probe_cover(cover)[1]  # default caps: fits fine
     monkeypatch.setattr(joins, "AUTO_BROADCAST_MAX_COVER_BYTES", 16_000)
-    assert not joins._cover_fits_broadcast(cover)  # rows alone said yes
+    assert not joins._probe_cover(cover)[1]  # rows alone said yes
     # auto now routes to the shuffle/clipped path; results identical
     a = joins.pip_join(sp, sv).toPandas()
     b = joins.pip_join(sp, sv, broadcast_cover=True).toPandas()

@@ -1,10 +1,9 @@
-"""Skew salting, checkpoint/resume lineage, and multimodal plumbing."""
+"""Skew salting and checkpoint/resume lineage."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from balrog_spark import lineage, mediaops, skew
+from balrog_spark import lineage, skew
 
 
 def test_salted_aggregate_matches_direct(spark):
@@ -133,229 +132,6 @@ def test_lineage_crash_between_write_and_record_is_idempotent(
     out = lineage.read_output(spark, out_dir)
     assert out.count() == 500
     assert out.select("k").distinct().count() == 500
-
-
-def test_media_image_features_plumbing(spark):
-    media = mediaops.synthetic_media(spark, 9)
-    feats = mediaops.image_features(media, out_w=4, out_h=4).collect()
-    imgs = [r for r in media.collect() if r.kind == "image"]
-    assert len(feats) == len(imgs)
-    for r in feats:
-        assert len(r.feat) == 16
-        assert all(0.0 <= v <= 1.0 for v in r.feat)
-    # determinism: same payload -> same features
-    feats2 = mediaops.image_features(media, out_w=4, out_h=4).collect()
-    assert sorted((r.media_id, tuple(r.feat)) for r in feats) == \
-        sorted((r.media_id, tuple(r.feat)) for r in feats2)
-
-
-def test_media_decode_stub_raises_without_fake():
-    with pytest.raises(NotImplementedError):
-        mediaops.decode_image(b"xx", 4, 4, fake=False)
-
-
-def test_media_frame_sampling(spark):
-    media = mediaops.synthetic_media(spark, 9)
-    frames = mediaops.sample_frames(media, every_n=10)
-    got = {(r.media_id, r.frame_idx) for r in frames.collect()}
-    for r in media.collect():
-        if r.kind == "video":
-            exp = set(range(0, r.n_frames, 10))
-            assert {f for m, f in got if m == r.media_id} == exp
-
-
-def test_media_audio_features_plumbing(spark):
-    media = mediaops.synthetic_media(spark, 9)
-    feats = mediaops.audio_features(media, window=512).toPandas()
-    audios = [r for r in media.collect() if r.kind == "audio"]
-    assert set(feats.media_id) == {r.media_id for r in audios}
-    assert (feats.groupby("media_id").size() == 4096 // 512).all()
-    assert ((feats.rms >= 0) & (feats.rms <= 1)).all()
-    assert ((feats.zcr >= 0) & (feats.zcr <= 1)).all()
-    # determinism
-    feats2 = mediaops.audio_features(media, window=512).toPandas()
-    a = feats.sort_values(["media_id", "window_idx"]).reset_index(drop=True)
-    b = feats2.sort_values(["media_id", "window_idx"]).reset_index(drop=True)
-    import pandas as pd
-    pd.testing.assert_frame_equal(a, b)
-
-
-def test_media_audio_decode_stub_raises_without_fake():
-    import pytest as _pytest
-    with _pytest.raises(NotImplementedError):
-        mediaops.decode_audio(b"xx", fake=False)
-
-
-def _ppm_bytes(arr):
-    h, w = arr.shape[:2]
-    return b"P6\n" + f"{w} {h}\n255\n".encode() + arr.tobytes()
-
-
-def _bmp_bytes(arr):
-    import struct
-    h, w = arr.shape[:2]
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, :w * 3] = arr[::-1, :, ::-1].reshape(h, w * 3)  # flip + BGR
-    data = rows.tobytes()
-    header = (b"BM" + struct.pack("<IHHI", 54 + len(data), 0, 0, 54)
-              + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                            len(data), 2835, 2835, 0, 0))
-    return header + data
-
-
-def test_real_ppm_and_bmp_decode_roundtrip():
-    rng = np.random.default_rng(6)
-    img = rng.integers(0, 256, size=(5, 7, 3), dtype=np.uint8)
-    np.testing.assert_array_equal(
-        mediaops.decode_image(_ppm_bytes(img), 7, 5), img)
-    np.testing.assert_array_equal(
-        mediaops.decode_image(_bmp_bytes(img), 7, 5), img)
-    # grayscale PGM replicates channels
-    g = rng.integers(0, 256, size=(4, 6), dtype=np.uint8)
-    pgm = b"P5\n# comment\n6 4\n255\n" + g.tobytes()
-    got = mediaops.decode_image(pgm, 6, 4)
-    np.testing.assert_array_equal(got[:, :, 0], g)
-    np.testing.assert_array_equal(got[:, :, 1], g)
-
-
-def test_real_decode_flows_through_image_features(spark):
-    import pandas as pd
-    rng = np.random.default_rng(8)
-    img = rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8)
-    media = spark.createDataFrame(pd.DataFrame([{
-        "media_id": "ppm-1", "kind": "image", "mime": "image/x-portable",
-        "width": 16, "height": 12, "n_frames": None,
-        "payload": bytearray(_ppm_bytes(img))}]), schema=mediaops.MEDIA)
-    feats = mediaops.image_features(media, out_w=4, out_h=4,
-                                    fake_decode=False).collect()
-    assert len(feats) == 1
-    exp = (mediaops.resize_nearest(img, 4, 4).astype(np.float32)
-           / 255.0).mean(axis=2).ravel()
-    assert np.allclose(feats[0].feat, exp, atol=1e-6)
-
-
-def test_real_png_decode_all_filters_roundtrip():
-    """decode_png inverts every scanline filter type (None/Sub/Up/Average/
-    Paeth) for gray, RGB and RGBA — encode with one filter for all rows,
-    decode, compare to the source."""
-    from balrog_spark import mediaops as M
-    rng = np.random.RandomState(99)
-    gray = rng.randint(0, 256, size=(13, 17), dtype=np.uint8)
-    rgb = rng.randint(0, 256, size=(11, 9, 3), dtype=np.uint8)
-    rgba = rng.randint(0, 256, size=(7, 12, 4), dtype=np.uint8)
-    for f in range(5):
-        assert (M.decode_png(M.encode_png(gray, f))
-                == np.repeat(gray[:, :, None], 3, axis=2)).all(), f
-        assert (M.decode_png(M.encode_png(rgb, f)) == rgb).all(), f
-        assert (M.decode_png(M.encode_png(rgba, f))
-                == rgba[:, :, :3]).all(), f
-
-
-def test_real_png_palette_and_guards():
-    import struct
-    import zlib
-
-    from balrog_spark import mediaops as M
-
-    # hand-assembled 4x2 palette PNG (color type 3)
-    def chunk(tag, body):
-        crc = zlib.crc32(tag + body) & 0xFFFFFFFF
-        return struct.pack(">I", len(body)) + tag + body \
-            + struct.pack(">I", crc)
-
-    plte = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 255], [7, 8, 9]],
-                    dtype=np.uint8)
-    idx = np.array([[0, 1, 2, 3], [3, 2, 1, 0]], dtype=np.uint8)
-    raw = b"".join(b"\x00" + row.tobytes() for row in idx)
-    payload = (M._PNG_SIG
-               + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 2, 8, 3, 0, 0, 0))
-               + chunk(b"PLTE", plte.tobytes())
-               + chunk(b"IDAT", zlib.compress(raw))
-               + chunk(b"IEND", b""))
-    assert (M.decode_png(payload) == plte[idx]).all()
-
-    # 16-bit depth refused, not mis-decoded
-    bad = (M._PNG_SIG
-           + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 2, 16, 0, 0, 0, 0))
-           + chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="unsupported PNG"):
-        M.decode_png(bad)
-
-    # dispatch: PNG routes through the real decoder; a corrupt JPEG
-    # payload fails parsing (ValueError), an unknown container stubs
-    rgb = np.arange(27, dtype=np.uint8).reshape(3, 3, 3)
-    assert (M.decode_image(M.encode_png(rgb), 3, 3) == rgb).all()
-    with pytest.raises(ValueError):
-        M.decode_image(b"\xff\xd8\xff\xe0jpegish", 3, 3)
-    with pytest.raises(NotImplementedError):
-        M.decode_image(b"unknowncontainer", 3, 3)
-
-
-def test_png_adam7_interlaced_roundtrip():
-    """Adam7-interlaced PNG decodes for real: every filter type, odd
-    dimensions (so several passes are partial/empty), gray and RGB,
-    pixel-exact against the source and against the non-interlaced
-    encoding of the same image."""
-    from balrog_spark import mediaops as M
-    rng = np.random.default_rng(12)
-    for shape in ((17, 23, 3), (8, 8, 3), (5, 3, 3), (1, 1, 3),
-                  (2, 9, 3)):
-        img = rng.integers(0, 256, shape, dtype=np.uint8)
-        for ft in range(5):
-            enc_i = M.encode_png(img, filter_type=ft, interlace=True)
-            assert (M.decode_png(enc_i) == img).all(), (shape, ft)
-            enc_p = M.encode_png(img, filter_type=ft)
-            assert (M.decode_png(enc_p) == M.decode_png(enc_i)).all()
-    # grayscale through the interlaced path replicates to RGB
-    g = rng.integers(0, 256, (11, 7), dtype=np.uint8)
-    got = M.decode_png(M.encode_png(g, filter_type=4, interlace=True))
-    assert (got == np.repeat(g[:, :, None], 3, axis=2)).all()
-
-
-def test_tar_shards_roundtrip_and_determinism(spark, tmp_path):
-    """WebDataset-style shard IO: executor-written tar shards roundtrip
-    every payload byte-exact, shard assignment is deterministic (two
-    writes produce byte-identical files), and the read side drives the
-    real decode pipeline."""
-    import hashlib
-    import os
-
-    from balrog_spark import mediaops as M
-
-    media = M.synthetic_media_real(spark, n=12)
-    d1, d2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    man = M.write_tar_shards(media, d1, n_shards=4).toPandas()
-    assert man.n_entries.sum() == 12
-    assert all(os.path.basename(p).startswith("shard-")
-               for p in man.path)
-
-    back = M.read_tar_shards(spark, d1).toPandas() \
-        .set_index("media_id").sort_index()
-    src = media.select("media_id", "kind", "payload").toPandas() \
-        .set_index("media_id").sort_index()
-    assert list(back.index) == list(src.index)
-    for mid in src.index:
-        assert back.loc[mid].kind == src.loc[mid].kind, mid
-        assert bytes(back.loc[mid].payload) == \
-            bytes(src.loc[mid].payload), mid
-
-    # byte-identical re-write (mtime pinned, entries sorted)
-    M.write_tar_shards(media, d2, n_shards=4).collect()
-    for p in man.path:
-        q = os.path.join(d2, os.path.basename(p))
-        h1 = hashlib.sha256(open(p, "rb").read()).hexdigest()
-        h2 = hashlib.sha256(open(q, "rb").read()).hexdigest()
-        assert h1 == h2
-
-    # the reloaded rows feed the real decoders end to end
-    feats = M.image_features(
-        M.read_tar_shards(spark, d1)
-        .withColumn("mime", F.lit("application/octet-stream"))
-        .withColumn("width", F.lit(0)).withColumn("height", F.lit(0))
-        .withColumn("n_frames", F.lit(0)),
-        out_w=4, out_h=4, fake_decode=False).collect()
-    assert len(feats) == sum(1 for k in src.kind if k == "image") > 0
 
 
 def test_lineage_refuses_stage_mismatch(spark, tmp_path):

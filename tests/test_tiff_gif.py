@@ -1,21 +1,17 @@
-"""Baseline TIFF 6.0 + GIF87a/89a codecs: pure-numpy roundtrips, LZW
-width-schedule/clear coverage, hand-built foreign-endian and multi-frame
-fixtures, and the Spark decode paths (image_features mapInPandas dispatch,
-animated-GIF decode_frames). Unlike mp3 (spec-data Huffman tables), every
-TIFF/GIF detail is derivable from public structure — so these decode for
-real, closing the last derivable media-format refusals."""
+"""Baseline TIFF 6.0 codec (the strip decoder under geotiff) and the
+standalone GIF87a/89a codec: pure-numpy roundtrips over every TIFF
+compression x predictor x byte order, LZW width-schedule/clear coverage,
+PackBits edge cases, hand-built big-endian and missing-StripByteCounts
+fixtures, GIF plain/interlaced/256-colour roundtrips and hand-spliced
+multi-frame compositing and disposal fixtures."""
 
 import struct
 
 import numpy as np
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from balrog_spark import gifcodec, mediaops, tiffcodec
+from balrog_spark import gifcodec, tiffcodec
 
-
-# --- TIFF ------------------------------------------------------------------
 
 @pytest.mark.parametrize("comp", [1, 32773, 5])
 @pytest.mark.parametrize("pred", [1, 2])
@@ -104,18 +100,6 @@ def test_tiff_16bit_roundtrip(comp, pred, byte_order):
     enc = tiffcodec.encode_tiff(rgb, compression=comp, predictor=pred,
                                 byte_order=byte_order)
     assert np.array_equal(tiffcodec.decode_tiff(enc), rgb)
-
-
-def test_tiff_16bit_decode_image_dispatch():
-    from balrog_spark import mediaops
-
-    rng = np.random.default_rng(22)
-    img = rng.integers(0, 65536, size=(6, 8, 3), dtype=np.uint16)
-    for byte_order in ("II", "MM"):
-        payload = tiffcodec.encode_tiff(img, byte_order=byte_order)
-        dec = mediaops.decode_image(payload, 8, 6)
-        assert dec.dtype == np.uint16
-        assert np.array_equal(dec, img)
 
 
 def _tiff_without_counts(comp: int, strips: list, w: int, h: int,
@@ -273,67 +257,3 @@ def test_gif_disposal_restore_previous():
     exp3 = f1.copy()                    # full-screen red reverted
     exp3[3, 3] = [0, 0, 255]
     assert np.array_equal(frames[2], exp3)
-
-
-# --- Spark dispatch ---------------------------------------------------------
-
-def _media_df(spark):
-    rng = np.random.default_rng(21)
-    pal = rng.integers(0, 256, size=(7, 3), dtype=np.uint8)
-    gif_img = pal[rng.integers(0, 7, size=(12, 16))]
-    tif_img = rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8)
-    rows = [
-        {"media_id": "tif-0", "kind": "image", "mime": "image/tiff",
-         "width": 16, "height": 12, "n_frames": None,
-         "payload": bytearray(tiffcodec.encode_tiff(tif_img,
-                                                    compression=5))},
-        {"media_id": "gif-0", "kind": "image", "mime": "image/gif",
-         "width": 16, "height": 12, "n_frames": None,
-         "payload": bytearray(gifcodec.encode_gif(gif_img))},
-    ]
-    return (spark.createDataFrame(rows, schema=mediaops.MEDIA),
-            {"tif-0": tif_img, "gif-0": gif_img})
-
-
-def test_image_features_dispatches_tiff_and_gif(spark):
-    media, imgs = _media_df(spark)
-    got = mediaops.image_features(media, fake_decode=False).toPandas() \
-        .set_index("media_id")
-    assert set(got.index) == {"tif-0", "gif-0"}
-    for mid, img in imgs.items():
-        small = mediaops.resize_nearest(img, 8, 8)
-        exp = (small.astype(np.float32) / 255.0).mean(axis=2).ravel()
-        assert np.allclose(np.array(got.loc[mid].feat), exp)
-
-
-def test_decode_frames_animated_gif(spark):
-    """A 3-frame animated GIF flows through the video sample->decode->
-    featurize path exactly like MJPEG."""
-    pal = np.array([[0, 0, 0], [255, 255, 255], [255, 0, 0], [0, 255, 0]],
-                   np.uint8)
-    base = np.zeros((8, 8), np.uint8)
-    frames_idx = []
-    for k in range(3):
-        f = base.copy()
-        f[k:k + 3, k:k + 3] = k + 1
-        frames_idx.append(f)
-    body = bytearray(gifcodec.encode_gif(pal[frames_idx[0]])[:-1])
-    for f in frames_idx[1:]:
-        lzw = gifcodec.gif_lzw_encode(f.tobytes(), 2)
-        body += struct.pack("<BHHHHB", 0x2C, 0, 0, 8, 8, 0x80 | 1)
-        body += pal.tobytes()
-        body += bytes([2, len(lzw)]) + lzw + b"\x00"
-    body += b"\x3B"
-    media = spark.createDataFrame(
-        [{"media_id": "anim-0", "kind": "video", "mime": "image/gif",
-          "width": 8, "height": 8, "n_frames": 3,
-          "payload": bytearray(bytes(body))}], schema=mediaops.MEDIA)
-    got = mediaops.decode_frames(media, every_n=2).toPandas()
-    assert sorted(got.frame_idx) == [0, 2]
-    # no GCE transparency: each full-screen frame fully overwrites, so the
-    # sampled frame 2 is exactly its own palette expansion
-    comp = pal[frames_idx[2]]
-    small = mediaops.resize_nearest(comp, 8, 8)
-    exp = (small.astype(np.float32) / 255.0).mean(axis=2).ravel()
-    row = got.set_index("frame_idx").loc[2]
-    assert np.allclose(np.array(row.feat), exp)
