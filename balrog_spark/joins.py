@@ -5,7 +5,9 @@ fiona bbox masks (reference: testing/test_gdal.py:127,138,
 data_prep/vegetation/xx_fiona_testing.py:133-136). The engine's substitute:
 
 1. polygons -> grid-cell *cover* rows (cell_id, poly...) — tiny vs the point
-   side, broadcast when it fits;
+   side. Broadcast or shuffle is decided in one place for every join,
+   :func:`_join_cover` (one byte-estimate probe unless the caller forces
+   it), which also owns the cover's cache;
 2. points -> cell_id via pure column arithmetic (no UDF);
 3. equi-join on cell_id (hash/broadcast — Catalyst's choice, AQE-skew-safe);
 4. exact geometry refinement vectorized inside one mapInPandas pass, grouping
@@ -80,24 +82,9 @@ def _probe_cover(cover: DataFrame):
     return probe, est <= AUTO_BROADCAST_MAX_COVER_BYTES
 
 
-# MRU-1 slot for the auto-mode probe cover (see _probe_cached_cover)
+# MRU-1 slot: the one cover _join_cover has built and cached
 _LAST_PROBE_COVER = None
 
-
-def _probe_cached_cover(cover: DataFrame):
-    """Cache a just-built cover, then run the auto broadcast probe over
-    the CACHED frame — without this the probe job computes the cover
-    UDF once and the join recomputes it (measured as a full extra
-    Python cover scan in pip/dwithin/veg_factors auto mode). Returns
-    (cached cover, fits_broadcast). Joins are lazy, so MRU-1 release:
-    the next call unpersists this cover (a still-pending earlier result
-    simply recomputes its cover)."""
-    global _LAST_PROBE_COVER
-    if _LAST_PROBE_COVER is not None:
-        _LAST_PROBE_COVER.unpersist(blocking=False)
-    cover = cover.cache()
-    _LAST_PROBE_COVER = cover
-    return cover, _probe_cover(cover)[1]
 
 _COVER = StructType([
     StructField("cell_id", LongType(), False),
@@ -233,22 +220,84 @@ def _spread(df: DataFrame, key: str = "addr_id") -> DataFrame:
     return df.repartition(n, key)
 
 
-def _radius_candidates(points: DataFrame, polys: DataFrame,
-                       radius_m: float, cell_m: float,
-                       broadcast_cover: bool | None,
-                       cover: DataFrame | None) -> DataFrame:
-    """Radius-join candidates: the ``radius_m``-padded cover (or a
-    pre-built one saved with that pad), broadcast if forced or if the auto
-    probe says it fits, equi-joined on cell_id with the spread points."""
-    if cover is None:
-        cover = polygon_cover(polys, cell_m, pad_m=radius_m)
+def _join_cover(polys: DataFrame, cover: DataFrame | None, cell_m: float,
+                broadcast_cover: bool | None, pad_m: float = 0.0,
+                clip_shuffle: bool = False, reuse: bool = False):
+    """The one cover-side decision of every spatial join: build, cache,
+    probe, broadcast or shuffle. Returns (cover to join on cell_id, the
+    _probe_cover row — n, mean WKT length, cell bbox — or None if no
+    probe ran).
+
+    The probe runs when ``broadcast_cover`` is None (auto: broadcast iff
+    the estimated cover bytes fit) or when the caller ``reuse``s the cover
+    (knn's ring rounds also need its count and cell bbox). A cover built
+    here for such a caller (``pad_m``-padded, full WKT) is cached in the
+    one MRU-1 slot, so the probe and every later read share one
+    computation; the next build releases it (joins are lazy: a
+    still-pending earlier result simply recomputes its cover). A cover
+    read once, by a forced-strategy join, is neither cached nor probed,
+    and a caller-passed ``cover`` (see :func:`save_cover`) is the
+    caller's to manage. ``clip_shuffle`` (PIP only) builds the cell-CLIPPED
+    cover for the shuffle path: bounded per-cell bytes, the 9.4M-polygon
+    path."""
+    global _LAST_PROBE_COVER
+    built = cover is None
+    probed = reuse or broadcast_cover is None
+    if built and probed:
+        if _LAST_PROBE_COVER is not None:
+            _LAST_PROBE_COVER.unpersist(blocking=False)
+        cover = _LAST_PROBE_COVER = polygon_cover(
+            polys, cell_m, pad_m=pad_m).cache()
+    elif built:
+        cover = polygon_cover(polys, cell_m, pad_m=pad_m,
+                              clip=clip_shuffle and not broadcast_cover)
+    probe = None
+    if probed:
+        probe, fits = _probe_cover(cover)
         if broadcast_cover is None:
-            cover, broadcast_cover = _probe_cached_cover(cover)
-    elif broadcast_cover is None:
-        broadcast_cover = _probe_cover(cover)[1]
-    if broadcast_cover:
-        cover = F.broadcast(cover)
-    return _spread(with_cell(points, cell_m)).join(cover, "cell_id")
+            broadcast_cover = fits
+            if built and clip_shuffle and not fits:
+                # the cached full cover served only the byte estimate
+                cover.unpersist(blocking=False)
+                cover = polygon_cover(polys, cell_m, clip=True)
+    return (F.broadcast(cover) if broadcast_cover else cover), probe
+
+
+def _geom_distance(xs, ys, geom):
+    """(distance, nearest x, nearest y) from each point to ``geom``, the
+    distance 0 for points inside it (holes excluded, even-odd)."""
+    d, nx, ny = geometry.points_to_geom_distance(xs, ys, geom)
+    return np.where(geometry.points_in_geom(xs, ys, geom), 0.0, d), nx, ny
+
+
+def _refine(cand: DataFrame, schema: StructType, per_group) -> DataFrame:
+    """Exact refinement of cell-join candidates in one mapInPandas pass:
+    each Arrow batch is grouped by polygon WKT, so every polygon is parsed
+    once and tested against all its candidate points at once.
+    ``per_group(geom, grp)`` returns (keep, cols): the boolean mask of
+    the group's pairs that survive (None keeps all) and their output
+    columns after (addr_id, veg_id, bal_number)."""
+    names = [f.name for f in schema]
+
+    def refine(batches):
+        for pdf in batches:
+            out = []
+            for wkt, grp in pdf.groupby("wkt", sort=False):
+                keep, cols = per_group(_geom_of(wkt), grp)
+                if keep is not None:
+                    if not keep.any():
+                        continue
+                    grp = grp[keep]
+                    cols = {c: v[keep] for c, v in cols.items()}
+                out.append(pd.DataFrame({
+                    "addr_id": grp.addr_id.values,
+                    "veg_id": grp.veg_id.values,
+                    "bal_number": pd.array(grp.bal_number.values,
+                                           dtype="Int64"),
+                    **cols}))
+            yield pd.concat(out) if out else pd.DataFrame(columns=names)
+
+    return cand.mapInPandas(refine, schema=schema)
 
 
 def pip_join(points: DataFrame, polys: DataFrame = None,
@@ -269,46 +318,11 @@ def pip_join(points: DataFrame, polys: DataFrame = None,
     with the same ``cell_m``; an unclipped cover on the shuffle path is
     correct, just heavier than the clipped one this function would
     build."""
-    if cover is not None:
-        if broadcast_cover is None:
-            broadcast_cover = _probe_cover(cover)[1]
-    elif broadcast_cover is None:
-        # probe the unclipped cover: if the decision is "broadcast" its
-        # cached rows are the real build side (no second cover
-        # computation)
-        cover, broadcast_cover = _probe_cached_cover(
-            polygon_cover(polys, cell_m))
-        if not broadcast_cover:
-            # the cached probe served only the byte estimate here
-            cover.unpersist(blocking=False)
-            cover = polygon_cover(polys, cell_m, clip=True)
-    else:
-        cover = polygon_cover(polys, cell_m, clip=not broadcast_cover)
-    if broadcast_cover:
-        cover = F.broadcast(cover)
-    pts = _spread(with_cell(points, cell_m))
-    cand = pts.join(cover, "cell_id")
-
-    def refine(batches):
-        for pdf in batches:
-            keep = []
-            for wkt, grp in pdf.groupby("wkt", sort=False):
-                geom = _geom_of(wkt)
-                inside = geometry.points_in_geom(
-                    grp.x.values, grp.y.values, geom)
-                if inside.any():
-                    sub = grp[inside]
-                    keep.append(pd.DataFrame({
-                        "addr_id": sub.addr_id.values,
-                        "veg_id": sub.veg_id.values,
-                        "bal_number": pd.array(
-                            sub.bal_number.values, dtype="Int64"),
-                    }))
-            yield (pd.concat(keep) if keep
-                   else pd.DataFrame(columns=["addr_id", "veg_id",
-                                              "bal_number"]))
-
-    return cand.mapInPandas(refine, schema=_refine_schema([]))
+    cover, _ = _join_cover(polys, cover, cell_m, broadcast_cover,
+                           clip_shuffle=True)
+    cand = _spread(with_cell(points, cell_m)).join(cover, "cell_id")
+    return _refine(cand, _refine_schema([]), lambda geom, grp: (
+        geometry.points_in_geom(grp.x.values, grp.y.values, geom), {}))
 
 
 def dwithin_join(points: DataFrame, polys: DataFrame = None,
@@ -323,37 +337,15 @@ def dwithin_join(points: DataFrame, polys: DataFrame = None,
     (distance needs the full WKT, so bytes shrink by distribution, not
     clipping). A pre-built ``cover`` (see :func:`save_cover`) MUST have
     been saved with ``pad_m`` equal to this radius."""
-    cand = _radius_candidates(points, polys, radius_m, cell_m,
-                              broadcast_cover, cover)
+    cover, _ = _join_cover(polys, cover, cell_m, broadcast_cover,
+                           pad_m=radius_m)
+    cand = _spread(with_cell(points, cell_m)).join(cover, "cell_id")
 
-    def refine(batches):
-        for pdf in batches:
-            keep = []
-            for wkt, grp in pdf.groupby("wkt", sort=False):
-                geom = _geom_of(wkt)
-                d, _, _ = geometry.points_to_geom_distance(
-                    grp.x.values, grp.y.values, geom)
-                inside = geometry.points_in_geom(
-                    grp.x.values, grp.y.values, geom)
-                d = np.where(inside, 0.0, d)
-                ok = d <= radius_m
-                if ok.any():
-                    sub = grp[ok]
-                    keep.append(pd.DataFrame({
-                        "addr_id": sub.addr_id.values,
-                        "veg_id": sub.veg_id.values,
-                        "bal_number": pd.array(
-                            sub.bal_number.values, dtype="Int64"),
-                        "distance_m": d[ok],
-                    }))
-            if keep:
-                yield pd.concat(keep)
-            else:
-                yield pd.DataFrame(columns=["addr_id", "veg_id",
-                                            "bal_number", "distance_m"])
+    def within(geom, grp):
+        d = _geom_distance(grp.x.values, grp.y.values, geom)[0]
+        return d <= radius_m, {"distance_m": d}
 
-    return cand.mapInPandas(refine,
-                            schema=_refine_schema(["distance_m"]))
+    return _refine(cand, _refine_schema(["distance_m"]), within)
 
 
 def _argmin_per_addr(scored: DataFrame, out_schema) -> DataFrame:
@@ -454,7 +446,6 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
         # max_ring=0 would pin the ring doubling at r=0 forever
         raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     spark = points.sparkSession
-    own_cover = cover is None
 
     out_schema = StructType([
         StructField("addr_id", StringType(), False),
@@ -506,7 +497,7 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
     # the k_eff distinct count never run. Only when the caller owns the
     # polys side (a pre-built cover has no polys frame to probe).
     go_direct = False
-    if own_cover and n_pts <= STRAGGLER_DIRECT_MAX:
+    if cover is None and n_pts <= STRAGGLER_DIRECT_MAX:
         pprobe = (polys.limit(AUTO_BROADCAST_MAX_COVER_ROWS + 1)
                   .agg(F.count("*").alias("n")).collect()[0])
         if pprobe.n == 0:
@@ -516,16 +507,8 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
 
     k_eff = 1
     if not go_direct:
-        # cache only a cover built HERE: a caller-passed cover
-        # (load_cover bucketed table / already-persisted frame) is the
-        # caller's to manage — unconditional caching leaked one cached
-        # cover per call in index-once-probe-many sessions
-        if own_cover:
-            cover = polygon_cover(polys, cell_m).cache()
-        cstats, fits = _probe_cover(cover)
-        if broadcast_cover is None:
-            broadcast_cover = fits
-        cover_b = F.broadcast(cover) if broadcast_cover else cover
+        cover, cstats = _join_cover(polys, cover, cell_m, broadcast_cover,
+                                    reuse=True)
         if cstats.n == 0:
             return _empty()
         if cstats.n > AUTO_BROADCAST_MAX_COVER_ROWS:
@@ -562,34 +545,12 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
         pending = best.join(done_a, "addr_id", "left_anti")
         return done, pending, done_a
 
-    def best_candidates(cand: DataFrame) -> DataFrame:
-        def refine(batches):
-            for pdf in batches:
-                keep = []
-                for wkt, grp in pdf.groupby("wkt", sort=False):
-                    geom = _geom_of(wkt)
-                    d, nx_, ny_ = geometry.points_to_geom_distance(
-                        grp.x.values, grp.y.values, geom)
-                    inside = geometry.points_in_geom(
-                        grp.x.values, grp.y.values, geom)
-                    d = np.where(inside, 0.0, d)
-                    az = geometry.azimuth_deg(grp.x.values, grp.y.values,
-                                              nx_, ny_)
-                    keep.append(pd.DataFrame({
-                        "addr_id": grp.addr_id.values,
-                        "veg_id": grp.veg_id.values,
-                        "bal_number": pd.array(
-                            grp.bal_number.values, dtype="Int64"),
-                        "distance_m": d, "azimuth_deg": az,
-                        "near_x": nx_, "near_y": ny_,
-                        "px": grp.x.values, "py": grp.y.values,
-                    }))
-                if keep:
-                    yield pd.concat(keep)
-                else:
-                    yield pd.DataFrame(columns=[f.name for f in out_schema])
-
-        return cand.mapInPandas(refine, schema=out_schema)
+    def nearest(geom, grp):
+        xs, ys = grp.x.values, grp.y.values
+        d, nx_, ny_ = _geom_distance(xs, ys, geom)
+        return None, {"distance_m": d,
+                      "azimuth_deg": geometry.azimuth_deg(xs, ys, nx_, ny_),
+                      "near_x": nx_, "near_y": ny_, "px": xs, "py": ys}
 
     # ring radii: the first round probes the whole disk out to ring 2
     # (resolves the typical point in one job), later rounds widen
@@ -615,8 +576,8 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
         # cover strategies — don't "optimize" this away)
         unresolved = _spread(unresolved)
         cand = _clamped_annulus(unresolved, r, prev, cstats).join(
-            cover_b.withColumnRenamed("cell_id", "probe_cell"), "probe_cell")
-        scored = best_candidates(cand)
+            cover.withColumnRenamed("cell_id", "probe_cell"), "probe_cell")
+        scored = _refine(cand, out_schema, nearest)
         if best_so_far is not None:
             scored = scored.unionByName(best_so_far.drop(*rank_cols))
         # localCheckpoint truncates lineage so the iterative plan stays
@@ -687,7 +648,6 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
                 f"over STRAGGLER_DIRECT_MAX={STRAGGLER_DIRECT_MAX}: "
                 "refusing to collect it to the driver")
         far_bc = spark.sparkContext.broadcast(frontier.toPandas())
-        k_slots = k
         out_cols = [f.name for f in out_schema]
 
         def partial_topk(batches):
@@ -700,12 +660,12 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
             ys = fr.y.values.astype(np.float64)
             # k insertion slots per point, each a column set; slot i
             # holds the i-th best (distance, veg_id)-ordered candidate
-            D = [np.full(n, np.inf) for _ in range(k_slots)]
-            VEG = [np.full(n, None, dtype=object) for _ in range(k_slots)]
-            BAL = [np.full(n, np.nan) for _ in range(k_slots)]
-            NX = [np.zeros(n) for _ in range(k_slots)]
-            NY = [np.zeros(n) for _ in range(k_slots)]
-            AZ = [np.zeros(n) for _ in range(k_slots)]
+            D = [np.full(n, np.inf) for _ in range(k)]
+            VEG = [np.full(n, None, dtype=object) for _ in range(k)]
+            BAL = [np.full(n, np.nan) for _ in range(k)]
+            NX = [np.zeros(n) for _ in range(k)]
+            NY = [np.zeros(n) for _ in range(k)]
+            AZ = [np.zeros(n) for _ in range(k)]
             slots = [D, VEG, BAL, NX, NY, AZ]
             for pdf in batches:
                 for r in pdf.itertuples():
@@ -714,10 +674,7 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
                         # unparseable/degenerate WKT would never have
                         # produced a cover row on the ring path either
                         continue
-                    d, nx_, ny_ = geometry.points_to_geom_distance(
-                        xs, ys, geom)
-                    inside = geometry.points_in_geom(xs, ys, geom)
-                    d = np.where(inside, 0.0, d)
+                    d, nx_, ny_ = _geom_distance(xs, ys, geom)
                     az = geometry.azimuth_deg(xs, ys, nx_, ny_)
                     bal = getattr(r, "bal_number", None)
                     bal = np.nan if bal is None or pd.isna(bal) \
@@ -730,7 +687,7 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
                     # place if closer; a displaced entry overwrites it
                     active = np.ones(n, dtype=bool)
                     placed = np.zeros(n, dtype=bool)
-                    for i in range(k_slots):
+                    for i in range(k):
                         better = cand[0] < D[i]
                         # finite ties only: an inf "tie" is two empty
                         # slots (veg None on both sides), order moot
@@ -743,21 +700,18 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
                                 (a < b for a, b in
                                  zip(cand[1][ti], VEG[i][ti])),
                                 bool, len(ti))
-                        if k_slots == 1:
-                            swap, put = better, better
-                        else:
-                            dup = active & (VEG[i] == r.veg_id)
-                            swap = active & ~dup & better
-                            put = swap | (dup & (placed | better))
-                            placed |= swap
-                            active &= ~dup
+                        dup = active & (VEG[i] == r.veg_id)
+                        swap = active & ~dup & better
+                        put = swap | (dup & (placed | better))
+                        placed |= swap
+                        active &= ~dup
                         if put.any():
                             for j, S in enumerate(slots):
                                 disp = S[i]
                                 S[i] = np.where(put, cand[j], disp)
                                 cand[j] = np.where(swap, disp, cand[j])
             out = []
-            for i in range(k_slots):
+            for i in range(k):
                 msk = np.isfinite(D[i])
                 if not msk.any():
                     continue
@@ -776,7 +730,7 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
         if best_so_far is not None:
             scored = scored.unionByName(best_so_far.drop(*rank_cols))
         # checkpoint so the returned frame no longer references the
-        # cover (lets the cache release below be safe)
+        # cover (the slot's next user may release its cache)
         resolved_parts.append(
             _topk_per_addr(scored, out_schema, k).localCheckpoint(
                 eager=True))
@@ -784,11 +738,6 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
     out = resolved_parts[0]
     for p in resolved_parts[1:]:
         out = out.unionByName(p)
-    if own_cover and not go_direct:
-        # every resolved part is checkpoint-backed by now; the cover
-        # cache has served its rounds — release executor storage
-        # (direct mode never built one)
-        cover.unpersist(blocking=False)
     return with_line(out)
 
 

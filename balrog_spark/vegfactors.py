@@ -14,7 +14,7 @@ area_m2, azimuth, distance_m, aspect, slope, geom, line_geom).
 Engine shape (Spark-first):
 
 1. candidate pairs via the dwithin cover equi-join (radius-padded cell
-   cover, broadcast or shuffle by byte estimate — joins.polygon_cover);
+   cover, broadcast or shuffle by byte estimate — joins._join_cover);
 2. ONE mapInPandas pass per candidate batch does the geometry: convex
    Sutherland-Hodgman clip of every polygon part (+holes) against the
    address's buffer polygon (geometry.clip_polys_to_convex), exact area,
@@ -87,8 +87,10 @@ def veg_factors(points: DataFrame, polys: DataFrame = None,
 
     ``cover``: a pre-built cover (joins.save_cover) — MUST have been
     saved with ``pad_m`` equal to this radius."""
-    cand = joins._radius_candidates(points, polys, radius_m, cell_m,
-                                    broadcast_cover, cover)
+    cover, _ = joins._join_cover(polys, cover, cell_m, broadcast_cover,
+                                 pad_m=radius_m)
+    cand = joins._spread(joins.with_cell(points, cell_m)).join(cover,
+                                                               "cell_id")
     cols = [f.name for f in VEG_FACTORS_SCHEMA]
 
     # nearest-point reuse bound: a source-part nearest point STRICTLY

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from balrog_spark import joins
+from balrog_spark import joins, vegfactors
 
 
 def _world(spark):
@@ -63,10 +63,30 @@ def test_prepared_cover_results_identical(spark, saved):
     a = _rows(joins.dwithin_join(sp, sv, 100.0), cols)
     b = _rows(joins.dwithin_join(sp, radius_m=100.0, cover=dw_cov), cols)
     assert a == b and len(a) > len(_rows(joins.pip_join(sp, sv), cols))
+    vf = [f.name for f in vegfactors.VEG_FACTORS_SCHEMA]
+    a = _rows(vegfactors.veg_factors(sp, sv, 100.0), vf)
+    b = _rows(vegfactors.veg_factors(sp, radius_m=100.0, cover=dw_cov), vf)
+    assert a == b and len(a) >= 3
     k = ["addr_id", "veg_id", "distance_m"]
     a = _rows(joins.knn_join(sp, sv), k)
     b = _rows(joins.knn_join(sp, cover=pip_cov), k)
     assert a == b and len(a) == 5
+
+
+def test_pending_join_recomputes_a_released_cover(spark, saved):
+    """The MRU-1 cover slot: building a second auto-mode join releases
+    the first join's cached cover, and the first result, still pending,
+    simply recomputes it — collected last, it equals an eager run."""
+    sp, sv = saved
+    cols = ["addr_id", "veg_id", "bal_number"]
+    eager = _rows(joins.pip_join(sp, sv), cols)
+    pending = joins.pip_join(sp, sv)
+    pip_cover = joins._LAST_PROBE_COVER
+    dw = joins.dwithin_join(sp, sv, 100.0)
+    assert joins._LAST_PROBE_COVER is not pip_cover
+    assert not pip_cover.is_cached
+    assert len(_rows(dw, cols)) > len(eager)
+    assert _rows(pending, cols) == eager and len(eager) >= 3
 
 
 def test_prepared_cover_skips_cover_exchange(spark, saved):

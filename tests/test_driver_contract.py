@@ -92,7 +92,6 @@ PKG = ROOT / "balrog_spark"
 KEEP = {
     "geotiff": "tiled GeoTIFF source/sink for national raster layers",
     "tiffcodec": "TIFF strip codecs under geotiff",
-    "gifcodec": "standalone GIF codec, next to go under ROADMAP item 4",
     "fgb": "FlatGeobuf vegetation-layer source",
     "gpkg": "GeoPackage vector source",
     "shapefile": "shapefile source for masks and extents",
@@ -139,3 +138,46 @@ def test_every_module_is_reached_or_kept():
             todo |= _package_imports(PKG / f"{m}.py")
     assert sorted(set(KEEP) - modules) == []
     assert sorted(modules - reached - set(KEEP)) == []
+
+
+# what a spatial join decides about its cover side: building it, the byte
+# probe, the broadcast hint, the cache and the one MRU-1 cache slot
+COVER_POLICY = {"polygon_cover", "_probe_cover", "broadcast", "cache",
+                "_LAST_PROBE_COVER"}
+
+
+def _cover_policy_uses(path: pathlib.Path) -> set:
+    """(top-level function, name) for every cover-policy use in ``path``:
+    calls of polygon_cover, _probe_cover, F.broadcast and .cache(), and
+    every reference to _LAST_PROBE_COVER (nested functions count as their
+    enclosing top-level function)."""
+    out = set()
+    for fn in ast.parse(path.read_text()).body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = getattr(f, "id", getattr(f, "attr", None))
+                if name == "broadcast" and isinstance(f, ast.Attribute) \
+                        and getattr(f.value, "id", None) != "F":
+                    continue  # sc.broadcast ships a variable, not a join
+                if name in COVER_POLICY:
+                    out.add((f"{path.stem}.{fn.name}", name))
+            elif getattr(node, "id", getattr(node, "attr", None)) \
+                    == "_LAST_PROBE_COVER":
+                out.add((f"{path.stem}.{fn.name}", "_LAST_PROBE_COVER"))
+    return out
+
+
+def test_one_cover_decision_point():
+    """Inside joins and vegfactors only joins._join_cover builds, probes,
+    broadcasts or caches a join's cover or touches the MRU-1 slot;
+    save_cover may still build the cover it persists."""
+    uses = set()
+    for mod in ("joins", "vegfactors"):
+        uses |= _cover_policy_uses(PKG / f"{mod}.py")
+    owner = "joins._join_cover"
+    assert {n for f, n in uses if f == owner} == COVER_POLICY
+    assert {u for u in uses if u[0] != owner} == {
+        ("joins.save_cover", "polygon_cover")}

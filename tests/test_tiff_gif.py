@@ -1,16 +1,14 @@
-"""Baseline TIFF 6.0 codec (the strip decoder under geotiff) and the
-standalone GIF87a/89a codec: pure-numpy roundtrips over every TIFF
-compression x predictor x byte order, LZW width-schedule/clear coverage,
-PackBits edge cases, hand-built big-endian and missing-StripByteCounts
-fixtures, GIF plain/interlaced/256-colour roundtrips and hand-spliced
-multi-frame compositing and disposal fixtures."""
+"""Baseline TIFF 6.0 codec (the strip decoder under geotiff): pure-numpy
+roundtrips over every compression x predictor x byte order, LZW
+width-schedule/clear coverage, PackBits edge cases, and hand-built
+big-endian and missing-StripByteCounts fixtures."""
 
 import struct
 
 import numpy as np
 import pytest
 
-from balrog_spark import gifcodec, tiffcodec
+from balrog_spark import tiffcodec
 
 
 @pytest.mark.parametrize("comp", [1, 32773, 5])
@@ -151,109 +149,3 @@ def test_tiff_missing_stripbytecounts():
     one = [tiffcodec.lzw_encode(img.tobytes())]
     dec = tiffcodec.decode_tiff(_tiff_without_counts(5, one, 5, 6, 6))
     assert np.array_equal(dec[:, :, 0], img)
-
-
-# --- GIF -------------------------------------------------------------------
-
-def test_gif_roundtrip_plain_and_interlaced():
-    rng = np.random.default_rng(9)
-    for shape in [(13, 17), (1, 1), (33, 7), (64, 64)]:
-        pal = rng.integers(0, 256, size=(13, 3), dtype=np.uint8)
-        img = pal[rng.integers(0, 13, size=shape)]
-        for il in (False, True):
-            enc = gifcodec.encode_gif(img, interlace=il)
-            assert np.array_equal(gifcodec.decode_gif(enc), img), (shape,
-                                                                   il)
-
-
-def test_gif_full_256_color_palette():
-    rng = np.random.default_rng(10)
-    pal = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
-    img = pal[rng.integers(0, 256, size=(40, 40))]
-    assert np.array_equal(gifcodec.decode_gif(gifcodec.encode_gif(img)),
-                          img)
-    with pytest.raises(ValueError):
-        gifcodec.encode_gif(rng.integers(0, 256, size=(64, 64, 3),
-                                         dtype=np.uint8))
-
-
-def test_gif_lzw_widths_and_min_code_sizes():
-    rng = np.random.default_rng(11)
-    for mcs in (2, 4, 8):
-        for n in (0, 1, 7, 300, 20000):
-            d = bytes(rng.integers(0, 1 << mcs, size=n, dtype=np.uint8))
-            enc = gifcodec.gif_lzw_encode(d, mcs)
-            assert gifcodec.gif_lzw_decode(enc, mcs, n) == d, (mcs, n)
-
-
-def test_gif_multiframe_compositing():
-    """Hand-spliced two-frame GIF: second frame paints a 2x2 red square at
-    (1, 1) with a local color table; frames composite in place."""
-    f1 = np.zeros((4, 4, 3), np.uint8)
-    body = bytearray(gifcodec.encode_gif(f1)[:-1])  # drop trailer
-    pal2 = np.array([[255, 0, 0], [0, 0, 0], [0, 0, 0], [0, 0, 0]],
-                    np.uint8)
-    lzw = gifcodec.gif_lzw_encode(np.zeros((2, 2), np.uint8).tobytes(), 2)
-    body += struct.pack("<BHHHHB", 0x2C, 1, 1, 2, 2, 0x80 | 1)
-    body += pal2.tobytes()
-    body += bytes([2, len(lzw)]) + lzw + b"\x00" + b"\x3B"
-    frames = gifcodec.gif_frames(bytes(body))
-    assert len(frames) == 2
-    assert np.array_equal(frames[0], f1)
-    exp = f1.copy()
-    exp[1:3, 1:3] = [255, 0, 0]
-    assert np.array_equal(frames[1], exp)
-
-
-def _splice_frame(body: bytearray, ix, iy, arr: np.ndarray,
-                  pal: np.ndarray, disposal: int | None):
-    """Append (optionally a GCE with a disposal method and) one image
-    block with a local color table to a trailerless GIF body."""
-    if disposal is not None:
-        body += bytes([0x21, 0xF9, 4, disposal << 2, 0, 0, 0, 0])
-    ih, iw = arr.shape
-    mcs = 2
-    lzw = gifcodec.gif_lzw_encode(arr.astype(np.uint8).tobytes(), mcs)
-    body += struct.pack("<BHHHHB", 0x2C, ix, iy, iw, ih, 0x80 | 1)
-    body += pal.tobytes()
-    body += bytes([mcs, len(lzw)]) + lzw + b"\x00"
-
-
-def test_gif_disposal_restore_background():
-    """Disposal 2: the frame rect clears to the background color before
-    the next frame renders — the red square must NOT persist."""
-    f1 = np.zeros((4, 4, 3), np.uint8)
-    body = bytearray(gifcodec.encode_gif(f1)[:-1])
-    pal_red = np.array([[255, 0, 0], [0, 0, 0], [0, 0, 0], [0, 0, 0]],
-                       np.uint8)
-    pal_grn = np.array([[0, 255, 0], [0, 0, 0], [0, 0, 0], [0, 0, 0]],
-                       np.uint8)
-    _splice_frame(body, 1, 1, np.zeros((2, 2)), pal_red, disposal=2)
-    _splice_frame(body, 0, 0, np.zeros((1, 1)), pal_grn, disposal=None)
-    frames = gifcodec.gif_frames(bytes(body + b"\x3B"))
-    assert len(frames) == 3
-    exp2 = f1.copy()
-    exp2[1:3, 1:3] = [255, 0, 0]
-    assert np.array_equal(frames[1], exp2)
-    exp3 = f1.copy()                    # red square ERASED to background
-    exp3[0, 0] = [0, 255, 0]
-    assert np.array_equal(frames[2], exp3)
-
-
-def test_gif_disposal_restore_previous():
-    """Disposal 3: the canvas reverts to the pre-frame screen."""
-    f1 = np.zeros((4, 4, 3), np.uint8)
-    body = bytearray(gifcodec.encode_gif(f1)[:-1])
-    pal_red = np.array([[255, 0, 0], [0, 0, 0], [0, 0, 0], [0, 0, 0]],
-                       np.uint8)
-    pal_blu = np.array([[0, 0, 255], [0, 0, 0], [0, 0, 0], [0, 0, 0]],
-                       np.uint8)
-    _splice_frame(body, 0, 0, np.zeros((4, 4)), pal_red, disposal=3)
-    _splice_frame(body, 3, 3, np.zeros((1, 1)), pal_blu, disposal=None)
-    frames = gifcodec.gif_frames(bytes(body + b"\x3B"))
-    assert len(frames) == 3
-    assert np.array_equal(frames[1],
-                          np.full((4, 4, 3), [255, 0, 0], np.uint8))
-    exp3 = f1.copy()                    # full-screen red reverted
-    exp3[3, 3] = [0, 0, 255]
-    assert np.array_equal(frames[2], exp3)
