@@ -24,11 +24,6 @@ def _dot(a, b):
     return F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return emb.withColumn("l2_norm",
-                          F.sqrt(_dot(F.col(vec_col), F.col(vec_col))))
-
-
 def cosine_topk(emb: DataFrame, query: DataFrame, k: int = 10,
                 vec_col: str = "embedding",
                 id_col: str = "vec_id") -> DataFrame:

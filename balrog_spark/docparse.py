@@ -63,21 +63,6 @@ def veg_from_documents(documents: DataFrame) -> DataFrame:
     )
 
 
-def tile_refs_from_documents(documents: DataFrame) -> DataFrame:
-    """media_ref spans -> (media_ref, layer, tile_x, tile_y, doc_id); joins
-    against the tile store on media_ref."""
-    s = explode_spans(documents)
-    t = s.filter(F.col("kind") == "media_ref")
-    p = F.split("media_ref", "/")
-    return t.select(
-        "media_ref",
-        p.getItem(0).alias("layer"),
-        p.getItem(1).cast("int").alias("tile_x"),
-        p.getItem(2).cast("int").alias("tile_y"),
-        "doc_id",
-    )
-
-
 def reassemble_documents(spans: DataFrame) -> DataFrame:
     """Inverse of :func:`explode_spans` — used by the span-sequence
     round-trip invariant test (kind, text, media_ref, order must survive all

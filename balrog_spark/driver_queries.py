@@ -540,37 +540,10 @@ SELECT sc.r AS row_idx, sc.c AS col_idx, sc.v AS slope_class,
        ac.v AS aspect_class
 FROM sc JOIN ac ON sc.r = ac.r AND sc.c = ac.c""")
 def r4_slope_aspect(spark, sf_dir):
-    """R4/R13 slope + compass aspect from a DEM grid, then R5/R6 remaps —
-    engine path: the numpy kernel (np.gradient + arctan/atan2) inside one
-    applyInPandas (reference: sa_tools.py:205-293)."""
-    from pyspark.sql.types import (LongType, StructField, StructType)
-    ev = _load(spark, sf_dir, "events").selectExpr(
-        "event_id", f"event_id DIV {_GRID_W} AS r",
-        f"event_id % {_GRID_W} AS c")
-    out_schema = StructType([
-        StructField("row_idx", LongType(), False),
-        StructField("col_idx", LongType(), False),
-        StructField("slope_class", LongType(), False),
-        StructField("aspect_class", LongType(), False),
-    ])
-
-    def compute(key, pdf: pd.DataFrame):
-        rmax = int(pdf.r.max())
-        grid = np.zeros((rmax + 1, _GRID_W), dtype=np.float64)
-        grid[pdf.r.values, pdf.c.values] = (
-            300.0 + 150.0 * np.sin(pdf.c.values * 0.21)
-            * np.cos(pdf.r.values * 0.17))
-        slope, aspect = kernels.cal_slope_aspect_vec(grid, 25.0, 25.0)
-        sc = kernels.reclassify_vec(slope, slope_remap(90.0))
-        ac = kernels.reclassify_vec(aspect, ASPECT_REMAP)
-        rr, cc = np.meshgrid(np.arange(rmax + 1), np.arange(_GRID_W),
-                             indexing="ij")
-        return pd.DataFrame({"row_idx": rr.ravel(), "col_idx": cc.ravel(),
-                             "slope_class": sc.ravel(),
-                             "aspect_class": ac.ravel()})
-
-    return ev.withColumn("g", F.lit(1)).groupBy("g") \
-        .applyInPandas(compute, schema=out_schema)
+    """R4/R13 slope + compass aspect from a DEM grid, then R5/R6 remaps
+    (reference: sa_tools.py:205-293) — the same tiled halo plan as
+    :func:`r4_slope_aspect_tiled`, under the query's original name."""
+    return r4_slope_aspect_tiled(spark, sf_dir)
 
 
 @q("r4_slope_aspect_tiled", f"""
@@ -609,8 +582,7 @@ def r4_slope_aspect_tiled(spark, sf_dir):
     10x25-px DEM tiles and slope/aspect flow through
     raster.slope_aspect_tiles — border-strip fan-out, tile-keyed
     exchange, per-tile halo assembly — so the correctness gate exercises
-    the same plan the 100-TB pipeline runs (the single-group
-    r4_slope_aspect twin remains as the kernel-only oracle)."""
+    the same plan the 100-TB pipeline runs."""
     from . import raster as raster_mod
 
     ev = _events_rc(spark, sf_dir)
@@ -807,11 +779,10 @@ FROM parts""")
 def v2_explode_parts(spark, sf_dir):
     """V2 multipolygon explode + V7 per-part shoelace area: the engine
     parses a 2-part MULTIPOLYGON WKT, explodes parts, computes areas
-    (reference: 03_explode_multipolygons_and_classify.sql:5-9,
+    through vector.explode_multipolygon (reference:
+    03_explode_multipolygons_and_classify.sql:5-9,
     04_merge_geometries.py:182-191)."""
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-    from . import geometry
+    from . import vector
     b = derived_boxes(spark, sf_dir)
     # build a genuine MULTIPOLYGON WKT with two displaced parts
     mk = lambda cx: F.format_string(
@@ -827,23 +798,10 @@ def v2_explode_parts(spark, sf_dir):
                  mk(F.col("cx") - F.col("hw") - 500.0), F.lit(", "),
                  mk(F.col("cx") + F.col("hw") + 500.0),
                  F.lit(")")).alias("wkt"))
-    out_schema = StructType([
-        StructField("veg_id", LongType(), False),
-        StructField("part_idx", LongType(), False),
-        StructField("area_m2", DoubleType(), False)])
-
-    def explode_parts(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                for i, ring in enumerate(geometry.parse_wkt(r.wkt)):
-                    rows.append({"veg_id": r.veg_id, "part_idx": i,
-                                 "area_m2": round(
-                                     geometry.ring_area(ring), 4)})
-            yield pd.DataFrame(rows, columns=["veg_id", "part_idx",
-                                              "area_m2"])
-
-    return mp.mapInPandas(explode_parts, schema=out_schema)
+    return vector.explode_multipolygon(mp).select(
+        F.col("veg_id").cast("long").alias("veg_id"),
+        F.col("part_idx").cast("long").alias("part_idx"),
+        F.round("area_m2", 4).cast("double").alias("area_m2"))
 
 
 @q("v5_class_lookup", """
@@ -919,42 +877,18 @@ SELECT veg_id, cell_x, cell_y,
 FROM pieces WHERE piece_area > 0""")
 def v8_subdivide(spark, sf_dir):
     """V8 polygon subdivision along grid-cell boundaries — the engine's
-    st_subdivide: Sutherland-Hodgman clip of each polygon to every cell its
-    bbox covers (reference: 03_explode...sql:66-75)."""
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-    from . import geometry
-    b = boxes_with_wkt(spark, sf_dir)
-    out_schema = StructType([
-        StructField("veg_id", LongType(), False),
-        StructField("cell_x", LongType(), False),
-        StructField("cell_y", LongType(), False),
-        StructField("piece_area", DoubleType(), False)])
-
-    def subdivide(batches):
-        cell = 400.0
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                ring = geometry.parse_wkt(r.wkt)[0]
-                xmin, ymin, xmax, ymax = geometry.bbox(ring)
-                for gx in range(int(np.floor(xmin / cell)),
-                                int(np.floor(xmax / cell)) + 1):
-                    for gy in range(int(np.floor(ymin / cell)),
-                                    int(np.floor(ymax / cell)) + 1):
-                        piece = geometry.clip_ring_to_box(
-                            ring, gx * cell, gy * cell,
-                            (gx + 1) * cell, (gy + 1) * cell)
-                        if len(piece) >= 3:
-                            a = geometry.ring_area(piece)
-                            if a > 0:
-                                rows.append({"veg_id": r.veg_id,
-                                             "cell_x": gx, "cell_y": gy,
-                                             "piece_area": round(a, 4)})
-            yield pd.DataFrame(rows, columns=["veg_id", "cell_x", "cell_y",
-                                              "piece_area"])
-
-    return b.mapInPandas(subdivide, schema=out_schema)
+    st_subdivide, vector.subdivide: Sutherland-Hodgman clip of each polygon
+    to every cell its bbox covers at the default cells.DEFAULT_CELL_M
+    (400 m, the oracle's cell), the cell id unpacked to (x, y) by the SQL
+    twin of cells.unpack (reference: 03_explode...sql:66-75)."""
+    from . import vector
+    pieces = vector.subdivide(boxes_with_wkt(spark, sf_dir))
+    return pieces.select(
+        F.col("veg_id").cast("long").alias("veg_id"),
+        (F.shiftright("cell_id", 20) - 524288).alias("cell_x"),
+        (F.col("cell_id").bitwiseAND((1 << 20) - 1) - 524288)
+        .alias("cell_y"),
+        F.round("piece_area", 4).cast("double").alias("piece_area"))
 
 
 @q("v3_validity", f"""
@@ -964,11 +898,10 @@ SELECT veg_id,
            AS is_valid
 FROM boxes""")
 def v3_validity(spark, sf_dir):
-    """V3 validity check: degenerate (zero-area) rings flagged invalid —
-    every 13th box is collapsed to a line before the check
-    (reference: 03_explode...sql:17-18)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-    from . import geometry
+    """V3 validity check through vector.validity_flags: degenerate
+    (zero-area) rings flagged invalid — every 13th box is collapsed to a
+    line before the check (reference: 03_explode...sql:17-18)."""
+    from . import vector
     b = derived_boxes(spark, sf_dir).withColumn(
         "hw2", F.when(F.col("veg_id") % 13 == 0, F.lit(0.0))
         .otherwise(F.col("hw")))
@@ -979,19 +912,9 @@ def v3_validity(spark, sf_dir):
         F.col("cx") + F.col("hw2"), F.col("cy") + F.col("hh"),
         F.col("cx") - F.col("hw2"), F.col("cy") + F.col("hh"),
         F.col("cx") - F.col("hw2"), F.col("cy") - F.col("hh"))
-    w = b.select("veg_id", wkt.alias("wkt"))
-    out_schema = StructType([StructField("veg_id", LongType(), False),
-                             StructField("is_valid", LongType(), False)])
-
-    def check(batches):
-        for pdf in batches:
-            rows = [{"veg_id": r.veg_id,
-                     "is_valid": int(geometry.ring_is_valid(
-                         geometry.parse_wkt(r.wkt)[0]))}
-                    for r in pdf.itertuples()]
-            yield pd.DataFrame(rows, columns=["veg_id", "is_valid"])
-
-    return w.mapInPandas(check, schema=out_schema)
+    flags = vector.validity_flags(b.select("veg_id", wkt.alias("wkt")))
+    return flags.select(F.col("veg_id").cast("long").alias("veg_id"),
+                        F.col("is_valid").cast("long").alias("is_valid"))
 
 
 # --- spatial joins (V9/J2, V10/J3, V11) --------------------------------------

@@ -702,64 +702,3 @@ def write_geotiff_granules(tiles: DataFrame, out_dir: str,
 
     return g.groupBy("layer", "gx", "gy").applyInPandas(assemble,
                                                         schema=schema)
-
-
-def granule_tiles_pdf(payload: bytes, layer: str, src_ref: str,
-                      nodata_to: float | None = -99.0,
-                      level: int = 0) -> pd.DataFrame:
-    """Decode EVERY tile of an in-memory granule into engine TILES rows
-    (pandas). The executor-side twin of ``geotiff_tiles`` for payloads
-    that arrive whole — e.g. a streaming binaryFile source where each
-    micro-batch row already carries the granule bytes.
-
-    Tile indices are WORLD-grid (floor of the tile origin over the tile
-    span) when the granule's origin is tile-span aligned — many granules
-    union into one table, and downstream halo joins need adjacent tiles
-    from different granules to carry adjacent indices. A NON-aligned
-    mosaic cannot get collision-free quantized indices (a partial edge
-    tile's origin can land in the same span cell as its neighbour), so
-    those fall back to file-local indices — correct within one file, and
-    the engine's own granule sink always writes aligned granules."""
-    import io as _io
-
-    f = _io.BytesIO(payload)
-    info = read_info(f, level=level)
-    span_x = info.tile_w * info.pixel_x
-    span_y = info.tile_h * info.pixel_y
-    aligned = (abs(info.x0 / span_x - round(info.x0 / span_x)) < 1e-6
-               and abs(info.y_top / span_y - round(info.y_top / span_y))
-               < 1e-6)
-    out = {c: [] for c in
-           ("media_ref", "layer", "tile_x", "tile_y", "x0", "y0",
-            "pixel_m", "nrows", "ncols", "data")}
-    for tr in range(info.tiles_y):
-        for tc in range(info.tiles_x):
-            idx = tr * info.tiles_x + tc
-            ncols = min(info.tile_w, info.width - tc * info.tile_w)
-            nrows = min(info.tile_h, info.height - tr * info.tile_h)
-            raw = _pread(f, info.offsets[idx], info.counts[idx])
-            arr = decode_tile(raw, info)[:nrows, :ncols] \
-                .astype(np.float32)
-            if info.nodata is not None and nodata_to is not None:
-                arr = np.where(arr == np.float32(info.nodata),
-                               np.float32(nodata_to), arr)
-            tx0 = info.x0 + tc * info.tile_w * info.pixel_x
-            ty_top = info.y_top - tr * info.tile_h * info.pixel_y
-            ty0 = ty_top - nrows * info.pixel_y
-            out["media_ref"].append(f"{src_ref}@{level}#{idx}")
-            out["layer"].append(layer)
-            if aligned:
-                out["tile_x"].append(int(np.floor(
-                    tx0 / span_x + 0.5 / info.tile_w)))
-                out["tile_y"].append(int(np.floor(
-                    ty0 / span_y + 0.5 / info.tile_h)))
-            else:
-                out["tile_x"].append(tc)
-                out["tile_y"].append(info.tiles_y - 1 - tr)
-            out["x0"].append(float(tx0))
-            out["y0"].append(float(ty_top - nrows * info.pixel_y))
-            out["pixel_m"].append(float(info.pixel_x))
-            out["nrows"].append(int(nrows))
-            out["ncols"].append(int(ncols))
-            out["data"].append(arr.ravel())
-    return pd.DataFrame(out)

@@ -64,25 +64,11 @@ def slope_in_aspect_vec(slope_data, aspect_data, aspect_value):
     return np.where(slope_data == NODATA, NODATA, out).astype(np.float32)
 
 
-def shift_fill(arr, dr: int, dc: int, fill):
-    """Shift an array so out[i, j] = arr[i + dr, j + dc], filling vacated
-    cells with ``fill``. Used to gather directional neighbours. A shift
-    that exceeds the array extent (narrow strips shorter than the scan
-    width) is all-fill."""
-    out = np.full(arr.shape, fill, dtype=np.float64)
-    rows, cols = arr.shape
-    if abs(dr) >= rows or abs(dc) >= cols:
-        return out
-    src_r = slice(max(dr, 0), rows + min(dr, 0))
-    src_c = slice(max(dc, 0), cols + min(dc, 0))
-    dst_r = slice(max(-dr, 0), rows + min(-dr, 0))
-    dst_c = slice(max(-dc, 0), cols + min(-dc, 0))
-    out[dst_r, dst_c] = arr[src_r, src_c]
-    return out
-
-
 def shift_fill32(arr, dr: int, dc: int, fill):
-    """float32 variant of :func:`shift_fill` (no dtype promotion)."""
+    """Shift ``arr`` into a float32 array so out[i, j] = arr[i + dr, j + dc],
+    filling vacated cells with ``fill`` (float32 out, no dtype promotion).
+    Used to gather directional neighbours. A shift that exceeds the array
+    extent (narrow strips shorter than the scan width) is all-fill."""
     out = np.full(arr.shape, fill, dtype=np.float32)
     rows, cols = arr.shape
     if abs(dr) >= rows or abs(dc) >= cols:

@@ -605,7 +605,7 @@ def dedup_incremental(new_docs: DataFrame, sigs: DataFrame,
 
     Pass ``new_sigs=`` to reuse already-computed batch signatures
     (e.g. when the caller appends the same signatures to the store
-    afterwards — the streaming ingest sink does exactly that)."""
+    afterwards)."""
     if new_sigs is None:
         new_sigs = minhash_signatures(new_docs, k, n_hashes,
                                       text_col, id_col)

@@ -4,8 +4,9 @@ output names (the driver's value-hash sorts columns by name, so a naming
 drift fails the gate even when values match). Names only — the bit-exact
 value comparison lives in tools/check_oracles.py and the driver's gate.
 Also the input row-count memo the derived-world queries size themselves by,
-and that every package module is reached from the engine or kept for a
-stated reason."""
+that every package module is reached from the engine or kept for a
+stated reason, and that every public package function is reached or listed
+as test-only."""
 
 import ast
 import pathlib
@@ -97,8 +98,6 @@ KEEP = {
     "shapefile": "shapefile source for masks and extents",
     "wkbio": "WKB/GeoParquet geometry codec under fgb and gpkg",
     "serve": "single-address serving path, parity-tested with the pipeline",
-    "streaming": "streaming ingest of document drops",
-    "snapshots": "versioned snapshot log for the streaming sink",
     "lineage": "per-bucket checkpoint and resume",
     "reference_impl": "pure-numpy reference the kernels are tested against",
 }
@@ -125,7 +124,9 @@ def _package_imports(path: pathlib.Path) -> set:
 
 def test_every_module_is_reached_or_kept():
     """Walk the package's imports from driver_queries, __init__ and the
-    modules perfbench imports: every module is reached or kept."""
+    modules perfbench imports: every module is reached or kept, and every
+    KEEP entry names a module that still exists (a deleted module leaves
+    KEEP with it)."""
     modules = {p.stem for p in PKG.glob("*.py")}
     todo = {"driver_queries", "__init__"}
     for p in (ROOT / "perfbench").glob("*.py"):
@@ -138,6 +139,77 @@ def test_every_module_is_reached_or_kept():
             todo |= _package_imports(PKG / f"{m}.py")
     assert sorted(set(KEEP) - modules) == []
     assert sorted(modules - reached - set(KEEP)) == []
+
+
+# public package functions no query, pipeline, kept module or benchmark
+# reaches: each is exercised by tests only. The set may only shrink; a
+# function that leaves it (deleted, or newly reached) must leave it here too
+TEST_ONLY = {
+    "cells.morton_key", "corpus.spark_documents",
+    "docparse.reassemble_documents", "geodesy.albers_forward",
+    "geodesy.albers_inverse", "geodesy.crs_params",
+    "geodesy.forward_azimuth_deg", "geodesy.geod_direct",
+    "geodesy.geod_inverse", "geodesy.haversine_m", "geodesy.lcc_forward",
+    "geodesy.lcc_inverse", "geodesy.projector_for_crs",
+    "geodesy.spherical_ring_area_m2", "geodesy.tm_forward",
+    "geodesy.tm_inverse", "geometry.buffer_points_vec",
+    "geometry.multipolygon_wkt", "geometry.ring_centroid", "joins.load_cover",
+    "joins.save_cover", "raster.bal_tiles_classified", "raster.build_pyramid",
+    "raster.dynamic_slope_max", "raster.reclassify_tiles", "textops.shingles",
+    "vector.buffer_points", "vector.dissolve"}
+
+
+def _names(node: ast.AST) -> set:
+    """Every identifier ``node`` refers to: bare names, attribute names
+    and names imported by ``from ... import``."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            out.update(a.name for a in n.names)
+    return out
+
+
+def test_every_public_function_is_reached_or_test_only():
+    """Function-level reachability: a top-level public function is reached
+    when its name is referenced from a root (driver_queries, pipeline,
+    __init__, the KEEP modules, perfbench, bench.py, bench_extra.py, or
+    any module's import-time statements) or, transitively, from the body
+    of a reached top-level function or class. The unreached set must equal
+    TEST_ONLY exactly."""
+    roots = {"driver_queries", "pipeline", "__init__"} | set(KEEP)
+    todo = set()
+    for p in [*(ROOT / "perfbench").glob("*.py"), ROOT / "bench.py",
+              ROOT / "bench_extra.py"]:
+        todo |= _names(ast.parse(p.read_text()))
+    defs = {}       # name -> top-level function/class nodes of that name
+    public = set()  # "module.function" for every non-root public function
+    for p in PKG.glob("*.py"):
+        tree = ast.parse(p.read_text())
+        if p.stem in roots:
+            todo |= _names(tree)
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append(node)
+                if isinstance(node, ast.FunctionDef) \
+                        and not node.name.startswith("_"):
+                    public.add(f"{p.stem}.{node.name}")
+            else:
+                todo |= _names(node)
+    reached = set()
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            for node in defs.get(name, ()):
+                todo |= _names(node)
+    unreached = {f for f in public if f.split(".")[1] not in reached}
+    assert sorted(unreached - TEST_ONLY) == [], "dead or test-only code"
+    assert sorted(TEST_ONLY - unreached) == [], "stale TEST_ONLY entry"
 
 
 # what a spatial join decides about its cover side: building it, the byte

@@ -411,51 +411,6 @@ def test_geotiff_roundtrip_property(h, w, tile, comp, bo, bigtiff, seed):
     assert (wx, ty) == (-500.0, 12345.0)
 
 
-def test_streaming_granule_ingest_exactly_once(spark, tmp_path):
-    """COG granules landing in a drop directory stream into the
-    versioned tile table: tile rows match the batch source bit-exact,
-    one snapshot per micro-batch, and a checkpoint-loss replay is
-    swallowed by the batch-id ledger (no duplicates)."""
-    import shutil
-
-    from balrog_spark import snapshots, streaming
-
-    drop = str(tmp_path / "drop")
-    table = str(tmp_path / "table")
-    ckpt = str(tmp_path / "ckpt")
-
-    ct = corpus.spark_tiles(spark, NX, NY, layers=("dem",)) \
-        .filter(F.col("layer") == "dem")
-    geotiff.write_geotiff_granules(ct, drop, granule_tiles=1).collect()
-
-    q = streaming.start_granule_snapshot_ingest(spark, drop, table, ckpt)
-    q.awaitTermination(180)
-    got = snapshots.read_table(spark, table).toPandas() \
-        .set_index(["tile_x", "tile_y"]).sort_index()
-    want = ct.toPandas().set_index(["tile_x", "tile_y"]).sort_index()
-    assert list(got.index) == list(want.index)
-    for key in got.index:
-        g, w = got.loc[key], want.loc[key]
-        assert (g.x0, g.y0, g.pixel_m) == (w.x0, w.y0, w.pixel_m)
-        assert np.array_equal(np.array(g.data, np.float32),
-                              np.array(w.data, np.float32)), key
-    n_snaps = len(snapshots.history(table))
-    assert all(r["stage"].startswith("granule-batch-")
-               for r in snapshots.history(table))
-
-    # nothing new -> no new snapshots
-    q = streaming.start_granule_snapshot_ingest(spark, drop, table, ckpt)
-    q.awaitTermination(180)
-    assert len(snapshots.history(table)) == n_snaps
-
-    # checkpoint loss replays every file; the ledger must swallow it
-    shutil.rmtree(ckpt)
-    q = streaming.start_granule_snapshot_ingest(spark, drop, table, ckpt)
-    q.awaitTermination(180)
-    assert len(snapshots.history(table)) == n_snaps
-    assert snapshots.read_table(spark, table).count() == len(want)
-
-
 def test_raster_bal_from_geotiff_both_layers(spark, tmp_path):
     """Switchability for the tiled raster pipeline too: DEM and
     vegetation both ingested from GeoTIFF mosaics (veg as uint8, the
