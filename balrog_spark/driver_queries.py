@@ -490,7 +490,7 @@ def _pack_grid_tiles(ev: DataFrame, n_ty: int, TR: int, TC: int,
     float64, then casts to the production float32."""
     from .schema import TILES
 
-    def pack(key, pdf: pd.DataFrame):
+    def pack(key, pdf):
         tx, ty = int(key[0]), int(key[1])
         r, c = pdf.r.values, pdf.c.values
         arr = np.zeros((TR, TC), dtype=np.float64)
@@ -1727,7 +1727,7 @@ def r3_extract_mask(spark, sf_dir):
     # build one tile row from the grid (applyInPandas single group)
     from .schema import TILES
 
-    def to_tile(key, pdf: pd.DataFrame):
+    def to_tile(key, pdf):
         grid = np.full((nrows, _GRID_W), -99.0)
         # row 0 = north edge: r ascending = southward
         grid[pdf.r.values, pdf.c.values] = pdf.v.values

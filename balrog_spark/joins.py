@@ -220,7 +220,7 @@ def _spread(df: DataFrame, key: str = "addr_id") -> DataFrame:
     return df.repartition(n, key)
 
 
-def _join_cover(polys: DataFrame, cover: DataFrame | None, cell_m: float,
+def _join_cover(polys: DataFrame, cell_m: float,
                 broadcast_cover: bool | None, pad_m: float = 0.0,
                 clip_shuffle: bool = False, reuse: bool = False):
     """The one cover-side decision of every spatial join: build, cache,
@@ -235,31 +235,26 @@ def _join_cover(polys: DataFrame, cover: DataFrame | None, cell_m: float,
     one MRU-1 slot, so the probe and every later read share one
     computation; the next build releases it (joins are lazy: a
     still-pending earlier result simply recomputes its cover). A cover
-    read once, by a forced-strategy join, is neither cached nor probed,
-    and a caller-passed ``cover`` (see :func:`save_cover`) is the
-    caller's to manage. ``clip_shuffle`` (PIP only) builds the cell-CLIPPED
-    cover for the shuffle path: bounded per-cell bytes, the 9.4M-polygon
-    path."""
+    read once, by a forced-strategy join, is neither cached nor probed.
+    ``clip_shuffle`` (PIP only) builds the cell-CLIPPED cover for the
+    shuffle path: bounded per-cell bytes, the 9.4M-polygon path."""
     global _LAST_PROBE_COVER
-    built = cover is None
-    probed = reuse or broadcast_cover is None
-    if built and probed:
+    probe = None
+    if reuse or broadcast_cover is None:
         if _LAST_PROBE_COVER is not None:
             _LAST_PROBE_COVER.unpersist(blocking=False)
         cover = _LAST_PROBE_COVER = polygon_cover(
             polys, cell_m, pad_m=pad_m).cache()
-    elif built:
-        cover = polygon_cover(polys, cell_m, pad_m=pad_m,
-                              clip=clip_shuffle and not broadcast_cover)
-    probe = None
-    if probed:
         probe, fits = _probe_cover(cover)
         if broadcast_cover is None:
             broadcast_cover = fits
-            if built and clip_shuffle and not fits:
+            if clip_shuffle and not fits:
                 # the cached full cover served only the byte estimate
                 cover.unpersist(blocking=False)
                 cover = polygon_cover(polys, cell_m, clip=True)
+    else:
+        cover = polygon_cover(polys, cell_m, pad_m=pad_m,
+                              clip=clip_shuffle and not broadcast_cover)
     return (F.broadcast(cover) if broadcast_cover else cover), probe
 
 
@@ -300,46 +295,34 @@ def _refine(cand: DataFrame, schema: StructType, per_group) -> DataFrame:
     return cand.mapInPandas(refine, schema=schema)
 
 
-def pip_join(points: DataFrame, polys: DataFrame = None,
+def pip_join(points: DataFrame, polys: DataFrame,
              cell_m: float = cells.DEFAULT_CELL_M,
-             broadcast_cover: bool | None = None,
-             cover: DataFrame | None = None) -> DataFrame:
+             broadcast_cover: bool | None = None) -> DataFrame:
     """Point-in-polygon join (V9/J2): returns (addr_id, veg_id, bal_number)
     for every point strictly inside a polygon (holes excluded, even-odd).
 
     ``broadcast_cover``: True broadcasts the full-WKT cover (small layers);
     False shuffle-joins a cell-CLIPPED cover (bounded per-cell bytes — the
-    9.4M-polygon path); None auto-selects by estimated cover bytes.
-
-    ``cover``: a PRE-BUILT cover (see :func:`save_cover` — the
-    index-once-probe-many move for a static national layer: repeated
-    joins skip the cover explode, and a cell_id-bucketed saved cover
-    also skips its side of the shuffle exchange). Must have been built
-    with the same ``cell_m``; an unclipped cover on the shuffle path is
-    correct, just heavier than the clipped one this function would
-    build."""
-    cover, _ = _join_cover(polys, cover, cell_m, broadcast_cover,
+    9.4M-polygon path); None auto-selects by estimated cover bytes."""
+    cover, _ = _join_cover(polys, cell_m, broadcast_cover,
                            clip_shuffle=True)
     cand = _spread(with_cell(points, cell_m)).join(cover, "cell_id")
     return _refine(cand, _refine_schema([]), lambda geom, grp: (
         geometry.points_in_geom(grp.x.values, grp.y.values, geom), {}))
 
 
-def dwithin_join(points: DataFrame, polys: DataFrame = None,
+def dwithin_join(points: DataFrame, polys: DataFrame,
                  radius_m: float = 100.0,
-                 cell_m: float = cells.DEFAULT_CELL_M,
-                 broadcast_cover: bool | None = None,
-                 cover: DataFrame | None = None) -> DataFrame:
+                 broadcast_cover: bool | None = None) -> DataFrame:
     """Distance-within join (V10/J3): pairs with point-to-polygon distance
     <= radius (0 inside; hole boundaries count — a point inside a hole is
     outside and measures to the hole ring). Cover is padded by the radius so
     one equi-join suffices. Non-broadcast covers shuffle-join on cell_id
     (distance needs the full WKT, so bytes shrink by distribution, not
-    clipping). A pre-built ``cover`` (see :func:`save_cover`) MUST have
-    been saved with ``pad_m`` equal to this radius."""
-    cover, _ = _join_cover(polys, cover, cell_m, broadcast_cover,
+    clipping)."""
+    cover, _ = _join_cover(polys, cells.DEFAULT_CELL_M, broadcast_cover,
                            pad_m=radius_m)
-    cand = _spread(with_cell(points, cell_m)).join(cover, "cell_id")
+    cand = _spread(with_cell(points)).join(cover, "cell_id")
 
     def within(geom, grp):
         d = _geom_distance(grp.x.values, grp.y.values, geom)[0]
@@ -420,11 +403,9 @@ def _clamped_annulus(unresolved: DataFrame, r: int, prev: int,
                      + F.col("dy")).alias("probe_cell")))
 
 
-def knn_join(points: DataFrame, polys: DataFrame = None,
+def knn_join(points: DataFrame, polys: DataFrame,
              max_ring: int = 8,
-             cell_m: float = cells.DEFAULT_CELL_M,
              broadcast_cover: bool | None = None,
-             cover: DataFrame | None = None,
              k: int = 1) -> DataFrame:
     """Nearest-polygon kNN join with bearing (V11): for each point the
     ``k`` closest polygons, each with exact distance (0 if inside),
@@ -435,7 +416,7 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
 
     Ring expansion: round r probes the cover cells in Chebyshev annulus
     (prev, r] around each unresolved point; a point resolves once it
-    holds k candidates AND its k-th-best distance <= (r * cell_m), the
+    holds k candidates AND its k-th-best distance <= r cell widths, the
     lower bound on anything in ring > r. Small inputs and small pending
     tails finish in one partial-top-k pass. k>1 output carries
     ``nn_rank`` (1..k); k=1 output has no rank column.
@@ -484,7 +465,7 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
     # resolved rows against it instead of re-scanning the frontier each
     # round) and its cell bbox (with the cover's, the ring radius that
     # has probed every cover cell for every point)
-    pstats = with_cell(points, cell_m).agg(
+    pstats = with_cell(points).agg(
         F.count("*").alias("n"), *_cell_bbox()).collect()[0]
     n_pts = pstats.n
     if n_pts == 0:
@@ -494,10 +475,9 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
     # whole point set fits the frontier cap and points x polygons is
     # under the pair budget, the one-pass partial-top-k finish consumes
     # the RAW polygon rows — the cover explode, its cache, its probe and
-    # the k_eff distinct count never run. Only when the caller owns the
-    # polys side (a pre-built cover has no polys frame to probe).
+    # the k_eff distinct count never run
     go_direct = False
-    if cover is None and n_pts <= STRAGGLER_DIRECT_MAX:
+    if n_pts <= STRAGGLER_DIRECT_MAX:
         pprobe = (polys.limit(AUTO_BROADCAST_MAX_COVER_ROWS + 1)
                   .agg(F.count("*").alias("n")).collect()[0])
         if pprobe.n == 0:
@@ -507,8 +487,8 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
 
     k_eff = 1
     if not go_direct:
-        cover, cstats = _join_cover(polys, cover, cell_m, broadcast_cover,
-                                    reuse=True)
+        cover, cstats = _join_cover(polys, cells.DEFAULT_CELL_M,
+                                    broadcast_cover, reuse=True)
         if cstats.n == 0:
             return _empty()
         if cstats.n > AUTO_BROADCAST_MAX_COVER_ROWS:
@@ -524,7 +504,7 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
         # a point can only ever find min(k, #polygons) neighbours
         k_eff = 1 if k == 1 else min(k, cover.select("veg_id")
                                      .distinct().count())
-        unresolved = with_cell(points, cell_m) \
+        unresolved = with_cell(points) \
             .select("addr_id", "x", "y", "cell_id")
 
     def split_resolved(best: DataFrame, bound: float):
@@ -555,7 +535,7 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
     # ring radii: the first round probes the whole disk out to ring 2
     # (resolves the typical point in one job), later rounds widen
     # geometrically. Collapsing the schedule to (3, max) was measured
-    # 2.3x SLOWER at sf0.1: the resolve bound is r*cell_m, so
+    # 2.3x SLOWER at sf0.1: the resolve bound is r cell widths, so
     # far-from-cover points survive a wide first ring and then explode
     # the (max_ring)^2-offset annulus. Past max_ring the radius doubles;
     # clamping each annulus to the cover bbox keeps a far point's probe
@@ -592,7 +572,8 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
             resolved_parts.append(best)
             best_so_far = None
             break
-        done, pending, done_addrs = split_resolved(best, r * cell_m)
+        done, pending, done_addrs = split_resolved(
+            best, r * cells.DEFAULT_CELL_M)
         resolved_parts.append(done)
         # counting the newly resolved addrs of the (tiny, per-addr)
         # checkpoint replaces an isEmpty() over the probe side, which
@@ -740,27 +721,3 @@ def knn_join(points: DataFrame, polys: DataFrame = None,
         out = out.unionByName(p)
     return with_line(out)
 
-
-def save_cover(polys: DataFrame, table: str,
-               cell_m: float = cells.DEFAULT_CELL_M, pad_m: float = 0.0,
-               clip: bool = False, n_buckets: int = 32) -> str:
-    """Persist a polygon cover as a cell_id-BUCKETED table — the
-    index-once-probe-many move for a static layer (the reference builds
-    its PostGIS GiST indexes once for the same reason). Subsequent
-    ``pip_join/dwithin_join/knn_join(..., cover=load_cover(...))`` calls
-    skip the cover explode entirely, and because the saved table is
-    bucketed+sorted on the join key, the shuffle-cover path reads it
-    with NO exchange on the cover side — at 9.4M national polygons the
-    cover build and its shuffle are the dominant fixed cost of every
-    probe. ``pad_m`` must match the radius of the distance joins the
-    cover will serve (0 for PIP/kNN)."""
-    cover = polygon_cover(polys, cell_m, pad_m=pad_m, clip=clip)
-    (cover.write.mode("overwrite").bucketBy(n_buckets, "cell_id")
-     .sortBy("cell_id").format("parquet").saveAsTable(table))
-    return table
-
-
-def load_cover(spark, table: str) -> DataFrame:
-    """Read back a :func:`save_cover` table (bucketing metadata intact —
-    Spark only honours it through the catalog, not a bare path read)."""
-    return spark.table(table)

@@ -237,25 +237,16 @@ def direction_class(azimuth_col):
 
 
 def address_bal_factors(spark: SparkSession, documents: DataFrame,
-                        tiles: DataFrame, buffer_m: float = 100.0,
-                        max_ring: int = 8,
-                        veg_documents: DataFrame | None = None) -> DataFrame:
+                        tiles: DataFrame, buffer_m: float = 100.0
+                        ) -> DataFrame:
     """documents + tiles -> one BAL-factors row per address:
     (addr_id, fdi, veg_id, bal_number, distance_m, azimuth_deg,
     slope_med_deg, aspect_med_deg, slope_class, aspect_class, dir_class,
-    eff_slope_code, bal).
-
-    ``veg_documents`` (default: ``documents``) supplies the vegetation
-    layer separately, so a partitioned/resumable run can feed one BUCKET
-    of address documents as the probe side while the spatial context
-    (vegetation, tiles) stays global — per-bucket cost then scales with
-    the bucket, not the corpus."""
+    eff_slope_code, bal)."""
     addrs = docparse.addresses_from_documents(documents)
-    vegs = docparse.veg_from_documents(
-        documents if veg_documents is None else veg_documents)
+    vegs = docparse.veg_from_documents(documents)
 
-    knn = joins.knn_join(addrs.select("addr_id", "x", "y"), vegs,
-                         max_ring=max_ring)
+    knn = joins.knn_join(addrs.select("addr_id", "x", "y"), vegs)
 
     sa = raster.slope_aspect_tiles(tiles, classify=False)
     pts = addrs.select("addr_id", "x", "y")

@@ -32,7 +32,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (DoubleType, FloatType, LongType, StructField,
+from pyspark.sql.types import (DoubleType, LongType, StructField,
                                StructType)
 
 from . import kernels
@@ -254,23 +254,21 @@ _PA_BAL = pa.schema(
        for d in ("w", "e", "n", "s", "nw", "ne", "se", "sw", "max")])
 
 
-def bal_tiles(tiles: DataFrame, fdi: int, halo: int = DEFAULT_HALO,
-              veg_remap: str = VEG_REMAP,
-              slope_max: float = 90.0) -> DataFrame:
+def bal_tiles(tiles: DataFrame, fdi: int, halo: int = DEFAULT_HALO
+              ) -> DataFrame:
     """The full Gen-1 pipeline per tile: veg reclass -> slope/aspect ->
     aspect/slope reclass -> 8-direction scan -> max
     (reference: bal.py:202-230 + calculate_bal.py:21-101), emitting 9 BAL
     arrays per tile.
 
-    ``slope_max`` bounds the slope remap's top class; pass the output of
-    :func:`dynamic_slope_max` for the reference's data-dependent bound
-    (reference: bal.py:110-120) — any bound >= the true max is
-    value-identical because arctan slopes never exceed 90 deg and earlier
-    remap classes (1..6) lie below every range start.
+    The slope remap's top class ends at 90 deg: the reference's
+    data-dependent bound (reference: bal.py:110-120) gives identical
+    classes, because arctan slopes never exceed 90 deg and earlier remap
+    classes (1..6) lie below every range start.
     """
     contribs = emit_border_strips(tiles, halo)
     aspect_remap_s = ASPECT_REMAP
-    slope_remap_s = slope_remap(slope_max)
+    slope_remap_s = slope_remap(90.0)
 
     def per_tile(tx: int, ty: int, tbl: pa.Table):
         dem = _assemble_arrow(tbl, "dem", halo)
@@ -285,7 +283,7 @@ def bal_tiles(tiles: DataFrame, fdi: int, halo: int = DEFAULT_HALO,
 
         slope_deg, aspect_deg = kernels.cal_slope_aspect_vec(
             dem_c, meta["pixel_m"], meta["pixel_m"])
-        veg_r = kernels.reclassify_vec(veg_c, veg_remap)
+        veg_r = kernels.reclassify_vec(veg_c, VEG_REMAP)
         aspect_r = kernels.reclassify_vec(aspect_deg, aspect_remap_s)
         slope_r = kernels.reclassify_vec(slope_deg, slope_remap_s)
 
@@ -356,8 +354,7 @@ _BAL_MAX_DDL = ("tile_x INT, tile_y INT, fdi INT, x0 DOUBLE, y0 DOUBLE, "
 
 
 def bal_max_tiles(tiles: DataFrame, fdis=(100, 80, 50, 40),
-                  halo: int = DEFAULT_HALO, veg_remap: str = VEG_REMAP,
-                  slope_max: float = 90.0) -> DataFrame:
+                  halo: int = DEFAULT_HALO) -> DataFrame:
     """Multi-FDI serving variant: one bal_max layer per FDI per tile, all
     four AS 3959 FDI values computed in a single pass (slope/aspect and
     reclassification amortized across FDIs). This is the precompute that
@@ -366,7 +363,7 @@ def bal_max_tiles(tiles: DataFrame, fdis=(100, 80, 50, 40),
     (reference: bal.py:345-350)."""
     contribs = emit_border_strips(tiles, halo)
     aspect_remap_s = ASPECT_REMAP
-    slope_remap_s = slope_remap(slope_max)
+    slope_remap_s = slope_remap(90.0)
     fdis = tuple(int(f) for f in fdis)
 
     def per_tile(tx: int, ty: int, tbl: pa.Table):
@@ -381,7 +378,7 @@ def bal_max_tiles(tiles: DataFrame, fdis=(100, 80, 50, 40),
             [dem_pad, veg_pad], present, h, n, m)
         slope_deg, aspect_deg = kernels.cal_slope_aspect_vec(
             dem_c, meta["pixel_m"], meta["pixel_m"])
-        veg_r = kernels.reclassify_vec(veg_c, veg_remap).astype(np.float64)
+        veg_r = kernels.reclassify_vec(veg_c, VEG_REMAP).astype(np.float64)
         aspect_r = kernels.reclassify_vec(aspect_deg, aspect_remap_s) \
             .astype(np.float64)
         slope_r = kernels.reclassify_vec(slope_deg, slope_remap_s) \
@@ -409,8 +406,7 @@ def bal_max_tiles(tiles: DataFrame, fdis=(100, 80, 50, 40),
 
 
 def slope_aspect_tiles(tiles: DataFrame, halo: int = DEFAULT_HALO,
-                       classify: bool = True,
-                       slope_max: float = 90.0) -> DataFrame:
+                       classify: bool = True) -> DataFrame:
     """Derive slope/aspect tile layers from DEM tiles (R4 + R5/R6), halo-
     exact like :func:`bal_tiles`. Emits two rows per tile with
     layer 'slope_r'/'aspect_r' (classified) or 'slope'/'aspect' (degrees),
@@ -418,7 +414,7 @@ def slope_aspect_tiles(tiles: DataFrame, halo: int = DEFAULT_HALO,
     dem = tiles.filter(F.col("layer") == "dem")
     contribs = emit_border_strips(dem, halo)
     aspect_remap_s = ASPECT_REMAP
-    slope_remap_s = slope_remap(slope_max)
+    slope_remap_s = slope_remap(90.0)
 
     pa_tiles = pa.schema([
         ("media_ref", pa.string()), ("layer", pa.string()),
@@ -526,29 +522,6 @@ def find_aoi_mask(tiles: DataFrame, extent: str | None = None,
         F.least("ry1", "vy1").alias("ymax")) \
         .filter((F.col("xmax") > F.col("xmin"))
                 & (F.col("ymax") > F.col("ymin")))
-
-
-def dynamic_slope_max(tiles: DataFrame) -> float:
-    """The reference's two-job dynamic remap bound: global max slope, then
-    remap (reference: bal.py:110-120)."""
-    dem = tiles.filter(F.col("layer") == "dem")
-    out_schema = StructType([StructField("mx", FloatType(), True)])
-
-    def tile_max(batches):
-        for pdf in batches:
-            vals = []
-            for r in pdf.itertuples():
-                arr = np.asarray(r.data, dtype=np.float64).reshape(
-                    r.nrows, r.ncols)
-                s, _ = kernels.cal_slope_aspect_vec(arr, r.pixel_m, r.pixel_m)
-                s = s[s != NODATA]
-                if s.size:
-                    vals.append(float(s.max()))
-            yield pd.DataFrame({"mx": vals or [None]})
-
-    row = dem.mapInPandas(tile_max, schema=out_schema) \
-        .agg(F.max("mx").alias("mx")).collect()[0]
-    return float(row.mx) if row.mx is not None else 20.0001
 
 
 def reclassify_tiles(tiles: DataFrame, remap: str,

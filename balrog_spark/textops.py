@@ -196,15 +196,15 @@ def _poly_shingle_hashes(norm: str, k: int, base: int = 31):
 
 
 def shingle_hash_stream(docs: DataFrame, k: int = 8,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        distinct: bool = True) -> DataFrame:
-    """(doc_id, h) for every k-char shingle of every document, where h
-    is the portable polynomial shingle hash — ONE Arrow-batched scan
-    per document instead of the explode→substring plan (which pays
-    O(L²) bytes per document, see :func:`_poly_shingle_hashes`).
-    ``distinct`` dedups per document (np.unique inside the scan — no
-    Spark-side shuffle). Documents shorter than k emit nothing, like
-    the string path."""
+                        text_col: str = "text", id_col: str = "doc_id"
+                        ) -> DataFrame:
+    """(doc_id, h) for every distinct k-char shingle of every document,
+    where h is the portable polynomial shingle hash — ONE Arrow-batched
+    scan per document instead of the explode→substring plan (which pays
+    O(L²) bytes per document, see :func:`_poly_shingle_hashes`). The
+    per-document dedup is np.unique inside the scan (no Spark-side
+    shuffle). Documents shorter than k emit nothing, like the string
+    path."""
     import numpy as np
 
     id_type = docs.schema[id_col].dataType.simpleString()
@@ -222,8 +222,7 @@ def shingle_hash_stream(docs: DataFrame, k: int = 8,
                 h = _poly_shingle_hashes(_norm_py(text), k)
                 if h.size == 0:
                     continue
-                if distinct:
-                    h = np.unique(h)
+                h = np.unique(h)
                 ids.append(np.full(h.size, doc_id, dtype=id_np))
                 hs.append(h)
             yield pd.DataFrame({
@@ -547,8 +546,7 @@ def _banded(mh: DataFrame, n_hashes: int, bands: int) -> DataFrame:
 
 def minhash_lsh_pairs(docs: DataFrame, k: int = 8, n_hashes: int = 12,
                       bands: int = 4, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      max_df: int | None = None) -> DataFrame:
+                      id_col: str = "doc_id") -> DataFrame:
     """MinHash + LSH banding candidate pairs.
 
     Signatures from :func:`minhash_signatures` (one Arrow scan, no
@@ -557,22 +555,8 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 8, n_hashes: int = 12,
     (doc_a < doc_b). The oracle runs the identical arithmetic in SQL,
     and there is no md5 on the per-shingle hot path (12x cheaper than
     hashing per permutation). The banding self-join is the operator's
-    only shuffle.
-
-    With ``max_df`` the signature must see only the df-filtered
-    shingle space (a global frequency), so that path keeps the
-    (doc_id, h) stream + broadcast anti-join + groupBy shape."""
-    if max_df is None:
-        mh = minhash_signatures(docs, k, n_hashes, text_col, id_col)
-    else:
-        hs = shingle_hash_stream(docs, k, text_col, id_col).cache()
-        hot = (hs.groupBy("h").agg(F.count("*").alias("df"))
-               .filter(F.col("df") > max_df).select("h"))
-        hs = hs.join(F.broadcast(hot), "h", "left_anti")
-        mh = hs.groupBy("doc_id").agg(*[
-            F.min((F.lit(MH_A[i]) * F.col("h") + F.lit(MH_B[i]))
-                  % F.lit(MH_P))
-            .alias(f"mh{i}") for i in range(n_hashes)])
+    only shuffle."""
+    mh = minhash_signatures(docs, k, n_hashes, text_col, id_col)
     banded = _banded(mh, n_hashes, bands)
     a = banded.select(F.col("doc_id").alias("doc_a"), "band", "key")
     b = banded.select(F.col("doc_id").alias("doc_b"), "band", "key")
@@ -584,7 +568,6 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 8, n_hashes: int = 12,
 def dedup_incremental(new_docs: DataFrame, sigs: DataFrame,
                       k: int = 8, n_hashes: int = 12, bands: int = 4,
                       text_col: str = "text", id_col: str = "doc_id",
-                      broadcast_new: bool = True,
                       new_sigs: DataFrame | None = None) -> DataFrame:
     """Incremental MinHash-LSH dedup: flag documents of an ingest
     BATCH that collide with an existing signature STORE (or with an
@@ -596,8 +579,7 @@ def dedup_incremental(new_docs: DataFrame, sigs: DataFrame,
     table appended per batch — the batch's own signatures are what
     you append after this call). The batch side is tiny relative to
     the store, so its band rows are BROADCAST against the store's
-    band rows (``broadcast_new=False`` falls back to a shuffle join
-    for giant backfill batches): the store never moves.
+    band rows: the store never moves.
 
     Output: one row per flagged new document — (doc_id, dup_of) where
     dup_of is the MINIMUM colliding partner id (stored or earlier
@@ -611,7 +593,7 @@ def dedup_incremental(new_docs: DataFrame, sigs: DataFrame,
                                       text_col, id_col)
     nb = _banded(new_sigs, n_hashes, bands)
     ob = _banded(sigs, n_hashes, bands)
-    probe = F.broadcast(nb) if broadcast_new else nb
+    probe = F.broadcast(nb)
     vs_store = (ob.join(probe.select(F.col("doc_id").alias("new_id"),
                                      "band", "key"),
                         ["band", "key"])
@@ -662,7 +644,7 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text",
     return sums.select("doc_id", fp.alias("simhash"))
 
 
-def simhash_sql(k_unused: int = 0) -> str:
+def simhash_sql() -> str:
     """DuckDB twin of :func:`simhash_fingerprints`: CTE chain ending in
     ``simhashes(doc_id, simhash)``, expects a ``norm(doc_id, n)`` CTE."""
     bit_sums = ",\n".join(

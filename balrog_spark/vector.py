@@ -160,9 +160,7 @@ def subdivide(polys: DataFrame, cell_m: float = cells.DEFAULT_CELL_M,
                             if a > 0:
                                 rows.append({
                                     "veg_id": str(getattr(r, id_col)),
-                                    "cell_id": int(cells.pack(
-                                        np.array([gx]),
-                                        np.array([gy]))[0]),
+                                    "cell_id": int(cells.pack(gx, gy)),
                                     "piece_wkt":
                                         geometry.polygon_wkt_rings(piece),
                                     "piece_area": a})
@@ -298,7 +296,7 @@ def dissolve_union(polys: DataFrame, class_col: str = "bal_number",
     # ~ms per GROUP in Arrow stream overhead (and AQE may coalesce the tiny
     # shuffle onto one task), so per-cell groups don't amortize; cells are
     # iterated inside the batch
-    def cell_union(key, pdf: pd.DataFrame):
+    def cell_union(key, pdf):
         rows = []
         for (cls, cell), grp in pdf.groupby(["cls", "cell_id"],
                                             sort=False):
@@ -352,7 +350,7 @@ def dissolve(polys: DataFrame, class_col: str = "bal_number",
     with_cell = polys.select(
         cls.alias("cls"), F.col(wkt_col).alias("wkt"))
 
-    def partial(key, pdf: pd.DataFrame):
+    def partial(key, pdf):
         rings = []
         for w in pdf.wkt.values:
             rings.extend(geometry.parse_wkt(w))
@@ -379,7 +377,7 @@ def dissolve(polys: DataFrame, class_col: str = "bal_number",
         StructField("area_m2", DoubleType(), False),
         StructField("wkt", StringType(), True)])
 
-    def final(key, pdf: pd.DataFrame):
+    def final(key, pdf):
         n = int(pdf.pn.sum())
         area = float(pdf.pa.sum())
         wkt = None

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
@@ -59,12 +59,10 @@ VEG_FACTORS_SCHEMA = StructType([
 ])
 
 
-def veg_factors(points: DataFrame, polys: DataFrame = None,
+def veg_factors(points: DataFrame, polys: DataFrame,
                 radius_m: float = 100.0,
                 quad_segs: int = 4,
-                cell_m: float = cells.DEFAULT_CELL_M,
-                broadcast_cover: bool | None = None,
-                cover: DataFrame | None = None) -> DataFrame:
+                broadcast_cover: bool | None = None) -> DataFrame:
     """One row per (point buffer ∩ polygon part) with clip geometry, exact
     clipped area, nearest-point distance/azimuth and the evidence
     LineString. ``points``: (addr_id, x, y); ``polys``: (veg_id,
@@ -83,14 +81,10 @@ def veg_factors(points: DataFrame, polys: DataFrame = None,
     holed parts dispatch to the exact slab clip
     (geometry.clip_polys_general), so a disconnected intersection emits
     a correct MULTIPOLYGON clip with exact area and distance — one row
-    per source part either way.
-
-    ``cover``: a pre-built cover (joins.save_cover) — MUST have been
-    saved with ``pad_m`` equal to this radius."""
-    cover, _ = joins._join_cover(polys, cover, cell_m, broadcast_cover,
-                                 pad_m=radius_m)
-    cand = joins._spread(joins.with_cell(points, cell_m)).join(cover,
-                                                               "cell_id")
+    per source part either way."""
+    cover, _ = joins._join_cover(polys, cells.DEFAULT_CELL_M,
+                                 broadcast_cover, pad_m=radius_m)
+    cand = joins._spread(joins.with_cell(points)).join(cover, "cell_id")
     cols = [f.name for f in VEG_FACTORS_SCHEMA]
 
     # nearest-point reuse bound: a source-part nearest point STRICTLY

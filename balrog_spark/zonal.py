@@ -35,6 +35,7 @@ from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType)
 
 from . import geometry, kernels
+from .constants import NODATA
 from .joins import _geom_of   # shared worker-global WKT-parse cache
 from .corpus import TILE_M
 from .session import map_key_groups
@@ -159,8 +160,7 @@ _EMPTY = np.array([], dtype=np.float64)
 
 
 def _segment_values(group: pd.DataFrame, key_of_row: np.ndarray,
-                    radius_m: float, nodata: float,
-                    include: str) -> dict:
+                    radius_m: float, include: str) -> dict:
     """Vectorized window extraction for a WHOLE batch: one concatenate +
     one mask over every (address, tile) row's cropped window instead of
     per-address pandas groupby + per-row numpy (the former hot loop).
@@ -200,7 +200,7 @@ def _segment_values(group: pd.DataFrame, key_of_row: np.ndarray,
         keep = dx ** 2 + dy ** 2 <= radius_m ** 2
     else:
         keep = (xs - xa) ** 2 + (ys - ya) ** 2 <= radius_m ** 2
-    keep &= flat != nodata
+    keep &= flat != NODATA
     kv = flat[keep]
     kk = np.repeat(keys, lens)[keep]
     order = np.argsort(kk, kind="stable")
@@ -230,8 +230,6 @@ def _batched(joined: DataFrame, cx, cy, per_batch, out_schema,
 
 
 def zonal_stats(points: DataFrame, tiles: DataFrame, radius_m: float,
-                circular: bool = False, sentinel: float = -9999.0,
-                nodata: float = -99.0,
                 batch_m: float = DEFAULT_BATCH_M,
                 crop: bool = True, tile_m: float = TILE_M,
                 include: str = "centre") -> DataFrame:
@@ -251,12 +249,10 @@ def zonal_stats(points: DataFrame, tiles: DataFrame, radius_m: float,
 
     def stats(group: pd.DataFrame):
         codes, uniq = pd.factorize(group["addr_id"], sort=False)
-        segs = _segment_values(group, codes, radius_m, nodata, include)
+        segs = _segment_values(group, codes, radius_m, include)
         rows = []
         for ai, addr_id in enumerate(uniq):
-            s = kernels.zonal_stats_1d(segs.get(ai, _EMPTY),
-                                       circular=circular,
-                                       sentinel=sentinel)
+            s = kernels.zonal_stats_1d(segs.get(ai, _EMPTY))
             rows.append({
                 "addr_id": addr_id, "buffer_size_m": float(radius_m),
                 "stat_min": s["min"], "stat_max": s["max"],
@@ -271,11 +267,9 @@ def zonal_stats(points: DataFrame, tiles: DataFrame, radius_m: float,
 
 def zonal_stats_multi(points: DataFrame, tiles: DataFrame, radius_m: float,
                       layer_specs: dict,
-                      sentinel: float = -9999.0,
-                      nodata: float = -99.0,
                       batch_m: float = DEFAULT_BATCH_M,
-                      crop: bool = True, tile_m: float = TILE_M,
-                      include: str = "centre") -> DataFrame:
+                      crop: bool = True, tile_m: float = TILE_M
+                      ) -> DataFrame:
     """Multi-layer zonal stats in ONE shuffle: ``layer_specs`` maps layer
     name -> {"circular": bool}; output has one column group per layer
     (<layer>_min .. <layer>_pixel_count). Halves the join/groupBy cost of
@@ -300,16 +294,14 @@ def zonal_stats_multi(points: DataFrame, tiles: DataFrame, radius_m: float,
         codes, uniq = pd.factorize(group["addr_id"], sort=False)
         lcodes = group["layer"].map(lay_code).fillna(-1).to_numpy(np.int64)
         key_of_row = np.where(lcodes >= 0, codes * L + lcodes, -1)
-        segs = _segment_values(group, key_of_row, radius_m, nodata,
-                               include)
+        segs = _segment_values(group, key_of_row, radius_m, "centre")
         rows = []
         for ai, addr_id in enumerate(uniq):
             row = {"addr_id": addr_id, "buffer_size_m": float(radius_m)}
             for li, lay in enumerate(layers):
                 s = kernels.zonal_stats_1d(
                     segs.get(ai * L + li, _EMPTY),
-                    circular=layer_specs[lay].get("circular", False),
-                    sentinel=sentinel)
+                    circular=layer_specs[lay].get("circular", False))
                 for stat in ("min", "max", "avg", "std", "med",
                              "pixel_count"):
                     row[f"{lay}_{stat}"] = s[stat]
@@ -321,7 +313,6 @@ def zonal_stats_multi(points: DataFrame, tiles: DataFrame, radius_m: float,
 
 
 def zonal_stats_poly(zones: DataFrame, tiles: DataFrame, layer_specs: dict,
-                     sentinel: float = -9999.0, nodata: float = -99.0,
                      batch_m: float = DEFAULT_BATCH_M,
                      tile_m: float = TILE_M) -> DataFrame:
     """Zonal stats over ARBITRARY polygon zones (A1 generalized): ``zones``
@@ -385,7 +376,7 @@ def zonal_stats_poly(zones: DataFrame, tiles: DataFrame, layer_specs: dict,
             gy = np.broadcast_to(ys[:, None], (n, m)).ravel()
             inside = geometry.points_in_geom(gx, gy, _geom_of(r.wkt))
             v = arr.ravel()[inside]
-            v = v[v != nodata]
+            v = v[v != NODATA]
             if v.size:
                 vals.setdefault((r.zone_id, r.layer), []).append(v)
         rows = []
@@ -395,8 +386,7 @@ def zonal_stats_poly(zones: DataFrame, tiles: DataFrame, layer_specs: dict,
                 chunks = vals.get((zone_id, lay))
                 s = kernels.zonal_stats_1d(
                     np.concatenate(chunks) if chunks else _EMPTY,
-                    circular=layer_specs[lay].get("circular", False),
-                    sentinel=sentinel)
+                    circular=layer_specs[lay].get("circular", False))
                 for stat in ("min", "max", "avg", "std", "med",
                              "pixel_count"):
                     row[f"{lay}_{stat}"] = s[stat]

@@ -153,10 +153,10 @@ TEST_ONLY = {
     "geodesy.lcc_inverse", "geodesy.projector_for_crs",
     "geodesy.spherical_ring_area_m2", "geodesy.tm_forward",
     "geodesy.tm_inverse", "geometry.buffer_points_vec",
-    "geometry.multipolygon_wkt", "geometry.ring_centroid", "joins.load_cover",
-    "joins.save_cover", "raster.bal_tiles_classified", "raster.build_pyramid",
-    "raster.dynamic_slope_max", "raster.reclassify_tiles", "textops.shingles",
-    "vector.buffer_points", "vector.dissolve"}
+    "geometry.multipolygon_wkt", "geometry.ring_centroid",
+    "raster.bal_tiles_classified", "raster.build_pyramid",
+    "raster.reclassify_tiles", "textops.shingles", "vector.buffer_points",
+    "vector.dissolve"}
 
 
 def _names(node: ast.AST) -> set:
@@ -244,12 +244,83 @@ def _cover_policy_uses(path: pathlib.Path) -> set:
 
 def test_one_cover_decision_point():
     """Inside joins and vegfactors only joins._join_cover builds, probes,
-    broadcasts or caches a join's cover or touches the MRU-1 slot;
-    save_cover may still build the cover it persists."""
+    broadcasts or caches a join's cover or touches the MRU-1 slot."""
     uses = set()
     for mod in ("joins", "vegfactors"):
         uses |= _cover_policy_uses(PKG / f"{mod}.py")
     owner = "joins._join_cover"
     assert {n for f, n in uses if f == owner} == COVER_POLICY
-    assert {u for u in uses if u[0] != owner} == {
-        ("joins.save_cover", "polygon_cover")}
+    assert {u for u in uses if u[0] != owner} == set()
+
+
+# defaulted parameters of the engine's public operators that no call site
+# passes: each always takes its default. The set may only shrink; a new
+# option needs a caller (a query, pipeline, benchmark, tool or test)
+NEVER_SET = {
+    "joins.with_cell.x", "joins.with_cell.y", "raster.bal_max_tiles.halo",
+    "raster.bal_tiles.halo", "raster.bal_tiles_classified.halo",
+    "raster.build_pyramid.factor", "raster.extract_by_mask_tiles.layer",
+    "raster.find_aoi_mask.dem_layer", "raster.find_aoi_mask.veg_layer",
+    "raster.polygonize_components.max_rounds",
+    "raster.sample_tiles_at_points.x", "raster.sample_tiles_at_points.y",
+    "textops.bm25_scores.b", "textops.bm25_scores.k1",
+    "textops.dedup_incremental.bands", "textops.dedup_incremental.k",
+    "textops.dedup_incremental.n_hashes", "textops.shingles.k"}
+
+
+def test_every_option_is_set_by_a_caller():
+    """Every defaulted parameter of a public top-level function in joins,
+    zonal, raster, vegfactors, pipeline and textops (``*_col`` column
+    bindings aside) is passed, by keyword or by position, at some call
+    site in the package, perfbench, bench*.py, tools or tests, or is
+    listed in NEVER_SET. Call sites match by function name."""
+    options = {}  # function name -> [("module.function.param", position)]
+    for mod in ("joins", "zonal", "raster", "vegfactors", "pipeline",
+                "textops"):
+        for fn in ast.parse((PKG / f"{mod}.py").read_text()).body:
+            if not isinstance(fn, ast.FunctionDef) \
+                    or fn.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            opts = [(arg.arg, i) for i, arg in enumerate(pos)
+                    if i >= len(pos) - len(a.defaults)]
+            opts += [(arg.arg, None) for arg, d in
+                     zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            options.setdefault(fn.name, []).extend(
+                (f"{mod}.{fn.name}.{name}", i) for name, i in opts
+                if not name.endswith("_col"))
+    passed = set()
+    for p in [*PKG.glob("*.py"), *(ROOT / "perfbench").glob("*.py"),
+              *ROOT.glob("bench*.py"), *(ROOT / "tools").glob("*.py"),
+              *(ROOT / "tests").glob("*.py")]:
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            kws = {k.arg for k in node.keywords}
+            for opt, i in options.get(
+                    getattr(f, "id", getattr(f, "attr", None)), ()):
+                if opt.rsplit(".", 1)[1] in kws \
+                        or (i is not None and i < len(node.args)):
+                    passed.add(opt)
+    unset = {o for opts in options.values() for o, _ in opts} - passed
+    assert sorted(unset - NEVER_SET) == [], "option no caller sets"
+    assert sorted(NEVER_SET - unset) == [], "stale NEVER_SET entry"
+
+
+def test_grouped_map_queries_build_without_eval_type_warning(spark,
+                                                             contract):
+    """The grouped-map functions behind these queries carry no partial
+    type hints, so PySpark infers no eval type from them and warns
+    nothing while the plans are built."""
+    import warnings
+
+    queries, _ = contract
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        for name in ("r4_slope_aspect_tiled", "r3_extract_mask",
+                     "v6_dissolve_union"):
+            queries[name](spark, SF_DIR)
+    assert not [w for w in caught
+                if "Cannot infer the eval type" in str(w.message)]

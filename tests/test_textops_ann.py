@@ -459,8 +459,7 @@ def test_dedup_incremental_matches_full_banding(spark, tmp_path):
     """Incremental dedup (batch vs persisted signature store) equals
     the full-corpus banding restricted to pairs whose LATER doc is in
     the batch, with dup_of = min colliding partner; signatures survive
-    a parquet store round trip (the persisted-store contract) and the
-    shuffle-join fallback agrees with the broadcast path."""
+    a parquet store round trip (the persisted-store contract)."""
     base = ("the quick brown fox jumps over the lazy dog and then "
             "wanders far across the wide open field looking for more")
     texts = [
@@ -487,9 +486,6 @@ def test_dedup_incremental_matches_full_banding(spark, tmp_path):
 
     inc = textops.dedup_incremental(new, sigs).toPandas() \
         .set_index("doc_id").dup_of.to_dict()
-    alt = textops.dedup_incremental(new, sigs, broadcast_new=False) \
-        .toPandas().set_index("doc_id").dup_of.to_dict()
-    assert inc == alt
 
     full = textops.minhash_lsh_pairs(d).toPandas()
     want = {}
