@@ -226,7 +226,9 @@ def _join_cover(polys: DataFrame, cell_m: float,
     """The one cover-side decision of every spatial join: build, cache,
     probe, broadcast or shuffle. Returns (cover to join on cell_id, the
     _probe_cover row — n, mean WKT length, cell bbox — or None if no
-    probe ran).
+    probe ran, the same cover without the broadcast hint). Plans that
+    read the cover outside a join take the third: Spark warns about a
+    join hint it finds on no join.
 
     The probe runs when ``broadcast_cover`` is None (auto: broadcast iff
     the estimated cover bytes fit) or when the caller ``reuse``s the cover
@@ -255,7 +257,7 @@ def _join_cover(polys: DataFrame, cell_m: float,
     else:
         cover = polygon_cover(polys, cell_m, pad_m=pad_m,
                               clip=clip_shuffle and not broadcast_cover)
-    return (F.broadcast(cover) if broadcast_cover else cover), probe
+    return (F.broadcast(cover) if broadcast_cover else cover), probe, cover
 
 
 def _geom_distance(xs, ys, geom):
@@ -304,8 +306,8 @@ def pip_join(points: DataFrame, polys: DataFrame,
     ``broadcast_cover``: True broadcasts the full-WKT cover (small layers);
     False shuffle-joins a cell-CLIPPED cover (bounded per-cell bytes — the
     9.4M-polygon path); None auto-selects by estimated cover bytes."""
-    cover, _ = _join_cover(polys, cell_m, broadcast_cover,
-                           clip_shuffle=True)
+    cover = _join_cover(polys, cell_m, broadcast_cover,
+                        clip_shuffle=True)[0]
     cand = _spread(with_cell(points, cell_m)).join(cover, "cell_id")
     return _refine(cand, _refine_schema([]), lambda geom, grp: (
         geometry.points_in_geom(grp.x.values, grp.y.values, geom), {}))
@@ -320,8 +322,8 @@ def dwithin_join(points: DataFrame, polys: DataFrame,
     one equi-join suffices. Non-broadcast covers shuffle-join on cell_id
     (distance needs the full WKT, so bytes shrink by distribution, not
     clipping)."""
-    cover, _ = _join_cover(polys, cells.DEFAULT_CELL_M, broadcast_cover,
-                           pad_m=radius_m)
+    cover = _join_cover(polys, cells.DEFAULT_CELL_M, broadcast_cover,
+                        pad_m=radius_m)[0]
     cand = _spread(with_cell(points)).join(cover, "cell_id")
 
     def within(geom, grp):
@@ -487,13 +489,13 @@ def knn_join(points: DataFrame, polys: DataFrame,
 
     k_eff = 1
     if not go_direct:
-        cover, cstats = _join_cover(polys, cells.DEFAULT_CELL_M,
-                                    broadcast_cover, reuse=True)
+        cover, cstats, plain = _join_cover(polys, cells.DEFAULT_CELL_M,
+                                           broadcast_cover, reuse=True)
         if cstats.n == 0:
             return _empty()
         if cstats.n > AUTO_BROADCAST_MAX_COVER_ROWS:
             # the capped probe saw a prefix only (giant covers)
-            cstats = cover.agg(F.count("*").alias("n"),
+            cstats = plain.agg(F.count("*").alias("n"),
                                *_cell_bbox()).collect()[0]
         n_cover = cstats.n
         # Chebyshev ring (in cells) that reaches every cover cell from
@@ -502,7 +504,7 @@ def knn_join(points: DataFrame, polys: DataFrame,
         need = max(cstats.gx1 - pstats.gx0, pstats.gx1 - cstats.gx0,
                    cstats.gy1 - pstats.gy0, pstats.gy1 - cstats.gy0)
         # a point can only ever find min(k, #polygons) neighbours
-        k_eff = 1 if k == 1 else min(k, cover.select("veg_id")
+        k_eff = 1 if k == 1 else min(k, plain.select("veg_id")
                                      .distinct().count())
         unresolved = with_cell(points) \
             .select("addr_id", "x", "y", "cell_id")
@@ -616,7 +618,7 @@ def knn_join(points: DataFrame, polys: DataFrame,
             polys_all = polys.select("veg_id", "bal_number", "wkt") \
                 .repartition(n_par)
         else:
-            polys_all = cover.select("veg_id", "bal_number", "wkt") \
+            polys_all = plain.select("veg_id", "bal_number", "wkt") \
                 .distinct().repartition(n_par)
         # direct mode never ran a ring round: read the raw points (the
         # _spread repartition only exists to parallelize ring refines)

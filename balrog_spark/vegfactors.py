@@ -82,8 +82,8 @@ def veg_factors(points: DataFrame, polys: DataFrame,
     (geometry.clip_polys_general), so a disconnected intersection emits
     a correct MULTIPOLYGON clip with exact area and distance — one row
     per source part either way."""
-    cover, _ = joins._join_cover(polys, cells.DEFAULT_CELL_M,
-                                 broadcast_cover, pad_m=radius_m)
+    cover = joins._join_cover(polys, cells.DEFAULT_CELL_M,
+                              broadcast_cover, pad_m=radius_m)[0]
     cand = joins._spread(joins.with_cell(points)).join(cover, "cell_id")
     cols = [f.name for f in VEG_FACTORS_SCHEMA]
 
