@@ -98,10 +98,6 @@ def polygon_wkt_rings(rings) -> str:
     return "POLYGON " + _rings_wkt(rings)
 
 
-def multipolygon_wkt(rings) -> str:
-    return "MULTIPOLYGON (" + ", ".join(ring_wkt(r) for r in rings) + ")"
-
-
 def multipolygon_wkt_polys(polys) -> str:
     """MULTIPOLYGON WKT from a list of [ext, holes...] polygons."""
     return "MULTIPOLYGON (" + ", ".join(_rings_wkt(p) for p in polys) + ")"

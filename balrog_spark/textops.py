@@ -565,8 +565,15 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 8, n_hashes: int = 12,
             .select("doc_a", "doc_b").distinct())
 
 
+# signature-store layout dedup_incremental assumes: shingle width,
+# permutation count and LSH bands (the store holds minhash_signatures'
+# default signatures, so the batch must be signed and banded the same way)
+STORE_K = 8
+STORE_N_HASHES = 12
+STORE_BANDS = 4
+
+
 def dedup_incremental(new_docs: DataFrame, sigs: DataFrame,
-                      k: int = 8, n_hashes: int = 12, bands: int = 4,
                       text_col: str = "text", id_col: str = "doc_id",
                       new_sigs: DataFrame | None = None) -> DataFrame:
     """Incremental MinHash-LSH dedup: flag documents of an ingest
@@ -589,10 +596,10 @@ def dedup_incremental(new_docs: DataFrame, sigs: DataFrame,
     (e.g. when the caller appends the same signatures to the store
     afterwards)."""
     if new_sigs is None:
-        new_sigs = minhash_signatures(new_docs, k, n_hashes,
+        new_sigs = minhash_signatures(new_docs, STORE_K, STORE_N_HASHES,
                                       text_col, id_col)
-    nb = _banded(new_sigs, n_hashes, bands)
-    ob = _banded(sigs, n_hashes, bands)
+    nb = _banded(new_sigs, STORE_N_HASHES, STORE_BANDS)
+    ob = _banded(sigs, STORE_N_HASHES, STORE_BANDS)
     probe = F.broadcast(nb)
     vs_store = (ob.join(probe.select(F.col("doc_id").alias("new_id"),
                                      "band", "key"),
@@ -835,9 +842,13 @@ def stratified_sample(docs: DataFrame, fractions_bp: dict,
     return sel.filter(F.col("sample_key") < thr)
 
 
-def bm25_scores(docs: DataFrame, terms, k1: float = 1.2, b: float = 0.75,
-                text_col: str = "text", id_col: str = "doc_id"
-                ) -> DataFrame:
+# BM25's term-frequency saturation and document-length normalisation
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def bm25_scores(docs: DataFrame, terms, text_col: str = "text",
+                id_col: str = "doc_id") -> DataFrame:
     """BM25 relevance of every document against a fixed query-term list —
     the classic retrieval/quality score a curation pipeline ranks with.
     One pass computes per-doc term frequencies and length (pure columns);
@@ -867,9 +878,9 @@ def bm25_scores(docs: DataFrame, terms, k1: float = 1.2, b: float = 0.75,
         df = F.col(f"df_{i}").cast("double")
         idf = F.log(F.lit(1.0) + (F.col("n_docs") - df + F.lit(0.5))
                     / (df + F.lit(0.5)))
-        denom = tf + F.lit(k1) * (F.lit(1.0 - b)
-                                  + F.lit(b) * F.col("dl") / F.col("avgdl"))
-        score = score + idf * tf * F.lit(k1 + 1.0) / denom
+        denom = tf + F.lit(BM25_K1) * (
+            F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl"))
+        score = score + idf * tf * F.lit(BM25_K1 + 1.0) / denom
     return j.select("doc_id", "dl", score.alias("bm25"))
 
 

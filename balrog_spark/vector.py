@@ -323,71 +323,3 @@ def dissolve_union(polys: DataFrame, class_col: str = "bal_number",
             .join(srcs, "cls")
             .select(F.col("cls").alias("bal_number"), "n_src",
                     "union_area_m2", "naive_area_m2"))
-
-
-def dissolve(polys: DataFrame, class_col: str = "bal_number",
-             cell_m: float = 1600.0, wkt_col: str = "wkt",
-             max_parts_wkt: int = 10000) -> DataFrame:
-    """V6 groupwise dissolve with the partial/final aggregate shape
-    (reference: 03_explode...sql:36-58, 04_merge_geometries.py:129-205):
-    per-(class, cell) partials, then per-class merge.
-
-    Contract: inputs are non-overlapping parts (exploded pieces of a
-    classification layer — the reference's dissolve input is exactly that),
-    so the union is the multipart collection and union area is the sum.
-    Output: (class, n_parts, area_m2, wkt) where wkt is the assembled
-    MULTIPOLYGON (NULL when a class exceeds ``max_parts_wkt`` parts — at
-    continental scale you keep the parts table, not one giant geometry).
-    """
-    part_schema = StructType([
-        StructField("cls", LongType(), False),
-        StructField("cell", LongType(), False),
-        StructField("pn", LongType(), False),
-        StructField("pa", DoubleType(), False),
-        StructField("pw", StringType(), True)])
-
-    cls = F.col(class_col).cast("long")
-    with_cell = polys.select(
-        cls.alias("cls"), F.col(wkt_col).alias("wkt"))
-
-    def partial(key, pdf):
-        rings = []
-        for w in pdf.wkt.values:
-            rings.extend(geometry.parse_wkt(w))
-        area = float(sum(geometry.ring_area(r) for r in rings))
-        wkt = geometry.multipolygon_wkt(rings) if rings else None
-        return pd.DataFrame([{
-            "cls": int(key[0]), "cell": int(key[1]),
-            "pn": len(rings), "pa": area, "pw": wkt}])
-
-    # partial: cell-local unions (cheap, bounded groups; hot classes are
-    # split across cells — the salting analogue for geometric aggregation)
-    # spatial partial-grouping key: the polygon's first x coordinate
-    # (any deterministic spatial proxy works for the partial stage)
-    centroid_cell = F.floor(
-        F.regexp_extract("wkt", r"(-?\d+\.?\d*)", 1).cast("double")
-        / F.lit(cell_m)).cast("long")
-    staged = with_cell.withColumn("cell", centroid_cell)
-    partials = staged.groupBy("cls", "cell").applyInPandas(
-        partial, schema=part_schema)
-
-    final_schema = StructType([
-        StructField("bal_number", LongType(), False),
-        StructField("n_parts", LongType(), False),
-        StructField("area_m2", DoubleType(), False),
-        StructField("wkt", StringType(), True)])
-
-    def final(key, pdf):
-        n = int(pdf.pn.sum())
-        area = float(pdf.pa.sum())
-        wkt = None
-        if n <= max_parts_wkt:
-            rings = []
-            for w in pdf.pw.dropna().values:
-                rings.extend(geometry.parse_wkt(w))
-            wkt = geometry.multipolygon_wkt(rings) if rings else None
-        return pd.DataFrame([{
-            "bal_number": int(key[0]), "n_parts": n, "area_m2": area,
-            "wkt": wkt}])
-
-    return partials.groupBy("cls").applyInPandas(final, schema=final_schema)

@@ -5,11 +5,12 @@ drift fails the gate even when values match). Names only — the bit-exact
 value comparison lives in tools/check_oracles.py and the driver's gate.
 Also the input row-count memo the derived-world queries size themselves by,
 that every package module is reached from the engine or kept for a
-stated reason, and that every public package function is reached or listed
-as test-only."""
+stated reason, that every public package function is reached or listed
+as test-only, and that README's layout tree names every package module."""
 
 import ast
 import pathlib
+import re
 
 import duckdb
 import pandas as pd
@@ -93,10 +94,6 @@ PKG = ROOT / "balrog_spark"
 KEEP = {
     "geotiff": "tiled GeoTIFF source/sink for national raster layers",
     "tiffcodec": "TIFF strip codecs under geotiff",
-    "fgb": "FlatGeobuf vegetation-layer source",
-    "gpkg": "GeoPackage vector source",
-    "shapefile": "shapefile source for masks and extents",
-    "wkbio": "WKB/GeoParquet geometry codec under fgb and gpkg",
     "serve": "single-address serving path, parity-tested with the pipeline",
     "lineage": "per-bucket checkpoint and resume",
     "reference_impl": "pure-numpy reference the kernels are tested against",
@@ -141,6 +138,20 @@ def test_every_module_is_reached_or_kept():
     assert sorted(modules - reached - set(KEEP)) == []
 
 
+def test_readme_layout_lists_every_package_module():
+    """README's layout tree under ``balrog_spark/`` names exactly the
+    package's modules: a deleted module leaves it, a new one joins it."""
+    lines = (ROOT / "README.md").read_text().splitlines()
+    listed = set()
+    for line in lines[lines.index("balrog_spark/") + 1:]:
+        if not line.startswith(" "):
+            break
+        m = re.match(r"  (\w+\.py) ", line)
+        if m:
+            listed.add(m.group(1))
+    assert listed == {p.name for p in PKG.glob("*.py")} - {"__init__.py"}
+
+
 # public package functions no query, pipeline, kept module or benchmark
 # reaches: each is exercised by tests only. The set may only shrink; a
 # function that leaves it (deleted, or newly reached) must leave it here too
@@ -153,10 +164,9 @@ TEST_ONLY = {
     "geodesy.lcc_inverse", "geodesy.projector_for_crs",
     "geodesy.spherical_ring_area_m2", "geodesy.tm_forward",
     "geodesy.tm_inverse", "geometry.buffer_points_vec",
-    "geometry.multipolygon_wkt", "geometry.ring_centroid",
+    "geometry.ring_centroid",
     "raster.bal_tiles_classified", "raster.build_pyramid",
-    "raster.reclassify_tiles", "textops.shingles", "vector.buffer_points",
-    "vector.dissolve"}
+    "raster.reclassify_tiles", "textops.shingles", "vector.buffer_points"}
 
 
 def _names(node: ast.AST) -> set:
@@ -263,9 +273,7 @@ NEVER_SET = {
     "raster.find_aoi_mask.dem_layer", "raster.find_aoi_mask.veg_layer",
     "raster.polygonize_components.max_rounds",
     "raster.sample_tiles_at_points.x", "raster.sample_tiles_at_points.y",
-    "textops.bm25_scores.b", "textops.bm25_scores.k1",
-    "textops.dedup_incremental.bands", "textops.dedup_incremental.k",
-    "textops.dedup_incremental.n_hashes", "textops.shingles.k"}
+    "textops.shingles.k"}
 
 
 def test_every_option_is_set_by_a_caller():

@@ -207,7 +207,8 @@ def test_extent_mask_matches_reference_expected_shapefile(spark):
     must agree within that tolerance."""
     import os
     import pandas as pd
-    from balrog_spark import geometry, raster as raster_mod, shapefile
+    from balrog_spark import geometry, raster as raster_mod
+    from tests.shp_reader import read_shp_records
     shp = "/root/reference/tests/test_data/reference/expect_mask.shp"
     if not os.path.exists(shp):
         import pytest as _pytest
@@ -217,7 +218,7 @@ def test_extent_mask_matches_reference_expected_shapefile(spark):
          "pixel_m": 25.0, "nrows": 64, "ncols": 64}]))
     got = raster_mod.find_aoi_mask(
         tiles, "343000 5850000 347000 5852000").toPandas().iloc[0]
-    exp = shapefile.read_shp_records(shp)
+    exp = read_shp_records(shp)
     ring = geometry.parse_wkt_polys(exp[0][2])[0][0]
     xmin, ymin, xmax, ymax = geometry.bbox(ring)
     assert abs(got.xmin - xmin) < 1e-3

@@ -23,6 +23,7 @@ from balrog_spark import kernels, raster
 
 from tests.aig_reader import read_aig
 from tests.hfa_reader import read_img
+from tests.shp_reader import read_shp_records
 
 _TD = "/root/reference/tests/test_data"
 
@@ -121,7 +122,6 @@ def test_extract_by_mask_matches_published_img(name):
     nearest-neighbour source lookup — which reproduces arcpy's
     ExtractByMask exactly on these fixtures."""
     from balrog_spark import geometry
-    from balrog_spark.shapefile import read_shp_records
     from tests.hfa_reader import read_mapinfo
     vm, (ulx0, uly0, px) = _vege_mga()
     poly = geometry.parse_wkt_polys(
@@ -150,7 +150,6 @@ def test_extract_by_mask_tiles_engine_path(spark):
     direct numpy mask of vege_mga with the real small-mask polygon."""
     import pandas as pd
     from balrog_spark import geometry
-    from balrog_spark.shapefile import read_shp_records
     vm, (ulx0, uly0, px) = _vege_mga()
     h, w = vm.shape
     wkt = read_shp_records(f"{_TD}/input/mask_extent_small.shp")[0][2]
@@ -315,7 +314,6 @@ def test_get_slope_aspect_classified_goldens_with_mask():
     import math
 
     from balrog_spark import geometry
-    from balrog_spark.shapefile import read_shp_records
     from tests.aig_reader import read_aig_bounds
     from tests.hfa_reader import read_mapinfo
 
@@ -368,7 +366,6 @@ def test_reclass_veg_reprojected_golden():
     (reference: bal.py:26-73, tests/test_reclass_veg.py)."""
     from balrog_spark import geodesy as G
     from balrog_spark import geometry
-    from balrog_spark.shapefile import read_shp_records
     from tests.aig_reader import read_aig_bounds
     from tests.hfa_reader import read_mapinfo
 
@@ -423,7 +420,6 @@ def test_get_footprint_matches_published_shapefile():
     (reference: bal.py:259-278); vege.img's footprint must equal
     expect_footprint.shp's ring vertex-for-vertex."""
     from balrog_spark import geometry
-    from balrog_spark.shapefile import read_shp_records
     from tests.hfa_reader import read_mapinfo
 
     ulx, uly, px = read_mapinfo(f"{_TD}/input/vege.img")

@@ -1,52 +1,27 @@
-"""S7 shapefile source/sink: the reference's real mask fixtures + a
-round-trip through the engine's writer."""
+"""S7 shapefile fixtures: the reference's real mask shapefiles decode, via
+the test-only reader, to polygons in its projected test AOI."""
 
 import os
 
-import numpy as np
 import pytest
 
-from balrog_spark import geometry, shapefile
+from balrog_spark import geometry
+from tests.shp_reader import read_shp_records
 
 _TD = "/root/reference/tests/test_data/input"
 
 
 @pytest.mark.skipif(not os.path.isdir(_TD),
                     reason="reference test_data not present")
-def test_read_reference_mask_shapefiles(spark):
+def test_read_reference_mask_shapefiles():
     for name in ("mask_extent_small", "mask_extent_large"):
-        df = shapefile.read_shapefile(spark, f"{_TD}/{name}.shp")
-        rows = df.collect()
+        rows = read_shp_records(f"{_TD}/{name}.shp")
         assert len(rows) >= 1
-        for r in rows:
-            assert r.geom_type in ("POLYGON", "MULTIPOLYGON")
-            polys = geometry.parse_wkt_polys(r.wkt)
+        for _, geom_type, wkt in rows:
+            assert geom_type in ("POLYGON", "MULTIPOLYGON")
+            polys = geometry.parse_wkt_polys(wkt)
             assert all(geometry.ring_area(p[0]) > 0 for p in polys)
             # the masks sit in the reference's projected test AOI
             xmin, ymin, xmax, ymax = geometry.bbox(polys[0][0])
             assert 300000 < xmin < xmax < 400000
             assert 5.8e6 < ymin < ymax < 5.9e6
-
-
-def test_shapefile_roundtrip(spark, tmp_path):
-    wkts = [
-        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))",
-        # holed polygon: hole winding must survive the round trip
-        "POLYGON ((20 0, 40 0, 40 20, 20 20, 20 0), "
-        "(25 5, 35 5, 35 15, 25 15, 25 5))",
-    ]
-    path = str(tmp_path / "out.shp")
-    shapefile.write_shp_polygons(path, wkts)
-    assert os.path.exists(path) and os.path.exists(path[:-4] + ".shx")
-    back = shapefile.read_shapefile(spark, path).orderBy("shape_id") \
-        .collect()
-    assert len(back) == 2
-    a0 = geometry.parse_wkt_polys(back[0].wkt)
-    assert geometry.polygon_area(a0[0]) == pytest.approx(100)
-    a1 = geometry.parse_wkt_polys(back[1].wkt)
-    assert len(a1[0]) == 2  # exterior + hole
-    assert geometry.polygon_area(a1[0]) == pytest.approx(400 - 100)
-    # PIP against the round-tripped holed polygon behaves even-odd
-    inside = geometry.points_in_polygon(
-        np.array([30.0, 22.0]), np.array([10.0, 2.0]), a1[0])
-    assert inside.tolist() == [False, True]

@@ -1,4 +1,4 @@
-"""Vector operator module (buffer/explode/validity/subdivide/dissolve)."""
+"""Vector operator module (buffer/explode/validity/subdivide)."""
 
 import numpy as np
 import pytest
@@ -53,21 +53,6 @@ def test_subdivide_preserves_area(spark):
     # 200 x 150 rect split on a 100 m grid -> 2x2 cells
     assert len(out) == 4
     assert_allclose(out.piece_area.sum(), 200.0 * 150.0)
-
-
-def test_dissolve_partial_final(spark):
-    out = vector.dissolve(_polys_df(spark).filter("veg_id != 'd'"),
-                          cell_m=400.0).toPandas() \
-        .set_index("bal_number")
-    assert out.loc[1, "n_parts"] == 3
-    assert_allclose(out.loc[1, "area_m2"], 10000 + 10000 + 200 * 150)
-    assert out.loc[2, "n_parts"] == 1
-    assert_allclose(out.loc[2, "area_m2"], 1600.0)
-    # reassembled multipolygon parses back to the same total area
-    rings = geometry.parse_wkt(out.loc[1, "wkt"])
-    assert len(rings) == 3
-    assert_allclose(sum(geometry.ring_area(r) for r in rings),
-                    out.loc[1, "area_m2"])
 
 
 def test_extract_by_mask_and_regrid(spark):

@@ -1,6 +1,6 @@
 """Fixed CPU cost of one Python task, before its UDF does any work.
 
-    python tools/pertask_cost.py        # from the checkout root
+    python tools/pertask_cost.py        # from any directory
 
 At local[1] (tasks run one after another) it caches a 30-partition frame,
 then times a no-op ``mapInArrow`` over it minus a plain ``count`` of it:
@@ -18,7 +18,11 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# local Spark workers import the engine via PYTHONPATH, not this sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 PARTS = 30
 REPS = 4
