@@ -403,68 +403,3 @@ def lcc_inverse(x, y, lat1: float = -36.0, lat2: float = -38.0,
         lat_r = np.pi / 2.0 - 2.0 * np.arctan(
             t * ((1.0 - s) / (1.0 + s)) ** (e / 2.0))
     return lon0 + np.degrees(th / n), np.degrees(lat_r)
-
-
-# --- CRS registry (GeoTIFF GeoKey interchange) -------------------------------
-
-# projection parameter sets for the EPSG codes the engine's projections
-# cover (all GRS80): GDA94 Australian Albers and VICGRID94 LCC — the two
-# fixed CRSs the reference's rasters use (examples/input/jerram_veg/
-# prj.adf; tests/test_data/input/vege.img PROJCS)
-_EPSG_PARAMS = {
-    3577: {"proj": "albers", "lat1": -18.0, "lat2": -36.0,
-           "lon0": 132.0, "lat0": 0.0, "fe": 0.0, "fn": 0.0},
-    3111: {"proj": "lcc", "lat1": -36.0, "lat2": -38.0,
-           "lon0": 145.0, "lat0": -37.0,
-           "fe": 2500000.0, "fn": 2500000.0},
-}
-
-
-def crs_params(crs) -> dict:
-    """Normalize a CRS as carried in GeoTIFF GeoKeys (EPSG int or param
-    dict) to the engine's projection param dict. Known EPSG: MGA94
-    zones (28349-28356), MGA2020 zones (7849-7856) — both TM on GRS80
-    with the same defining params — plus 3577 / 3111."""
-    if isinstance(crs, dict):
-        return dict(crs)
-    code = int(crs)
-    if 28349 <= code <= 28356 or 7849 <= code <= 7856:
-        zone = code % 100
-        return {"proj": "tm", "lon0": float(zone * 6 - 183),
-                "lat0": 0.0, "k0": 0.9996,
-                "fe": 500000.0, "fn": 10000000.0}
-    if code in _EPSG_PARAMS:
-        return dict(_EPSG_PARAMS[code])
-    raise ValueError(
-        f"EPSG:{code} not in the engine's registry — pass the param "
-        "dict form instead")
-
-
-def projector_for_crs(crs):
-    """(forward, inverse) lon/lat<->projected-metre callables for a CRS
-    read from a GeoTIFF's GeoKeys (:func:`geotiff.read_info` ``.crs``)
-    — the reprojection entry point that needs no side-channel CRS
-    parameter."""
-    p = crs_params(crs)
-    kind = p.pop("proj")
-    if kind == "tm":
-        if p.get("lat0", 0.0) != 0.0:
-            raise ValueError("TM with non-zero natural-origin latitude "
-                             "is not supported")
-        args = dict(lon0=p["lon0"], k0=p.get("k0", 0.9996),
-                    fe=p.get("fe", 500000.0), fn=p.get("fn", 10000000.0))
-        return (lambda lon, lat: tm_forward(lon, lat, **args),
-                lambda x, y: tm_inverse(x, y, **args))
-    if kind == "albers":
-        args = dict(lat1=p["lat1"], lat2=p["lat2"], lon0=p["lon0"],
-                    lat0=p.get("lat0", 0.0), fe=p.get("fe", 0.0),
-                    fn=p.get("fn", 0.0))
-        return (lambda lon, lat: albers_forward(lon, lat, **args),
-                lambda x, y: albers_inverse(x, y, **args))
-    if kind == "lcc":
-        args = dict(lat1=p["lat1"], lat2=p["lat2"], lon0=p["lon0"],
-                    lat0=p.get("lat0", 0.0), fe=p.get("fe", 0.0),
-                    fn=p.get("fn", 0.0))
-        return (lambda lon, lat: lcc_forward(lon, lat, **args),
-                lambda x, y: lcc_inverse(x, y, **args))
-    raise ValueError(f"unknown projection kind {kind!r}")

@@ -213,9 +213,8 @@ def cal_slope_aspect_vec(elev, pixel_w: float, pixel_h: float):
     filled = edge_fill_vec(elev)
     # np.gradient's FIRST spacing is axis 0 = rows = vertical = pixel
     # HEIGHT (all engine callers pass square pixels, where the order is
-    # invisible; GeoTIFFs carry distinct pixel_x/pixel_y, so a future
-    # non-square caller must not get transposed spacings). The
-    # dzdx/dzdy names encode the golden-verified compass convention.
+    # invisible; a non-square caller must not get transposed spacings).
+    # The dzdx/dzdy names encode the golden-verified compass convention.
     dzdx, dzdy = np.gradient(filled, pixel_h, pixel_w)
     slope = np.arctan(np.hypot(dzdx, dzdy)) / RADIANS_PER_DEGREE
     aspect = np.mod(450.0 - np.arctan2(dzdy, -dzdx) / RADIANS_PER_DEGREE,

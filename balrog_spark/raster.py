@@ -254,8 +254,7 @@ _PA_BAL = pa.schema(
        for d in ("w", "e", "n", "s", "nw", "ne", "se", "sw", "max")])
 
 
-def bal_tiles(tiles: DataFrame, fdi: int, halo: int = DEFAULT_HALO
-              ) -> DataFrame:
+def bal_tiles(tiles: DataFrame, fdi: int) -> DataFrame:
     """The full Gen-1 pipeline per tile: veg reclass -> slope/aspect ->
     aspect/slope reclass -> 8-direction scan -> max
     (reference: bal.py:202-230 + calculate_bal.py:21-101), emitting 9 BAL
@@ -266,13 +265,13 @@ def bal_tiles(tiles: DataFrame, fdi: int, halo: int = DEFAULT_HALO
     classes, because arctan slopes never exceed 90 deg and earlier remap
     classes (1..6) lie below every range start.
     """
-    contribs = emit_border_strips(tiles, halo)
+    contribs = emit_border_strips(tiles)
     aspect_remap_s = ASPECT_REMAP
     slope_remap_s = slope_remap(90.0)
 
     def per_tile(tx: int, ty: int, tbl: pa.Table):
-        dem = _assemble_arrow(tbl, "dem", halo)
-        veg = _assemble_arrow(tbl, "veg", halo)
+        dem = _assemble_arrow(tbl, "dem", DEFAULT_HALO)
+        veg = _assemble_arrow(tbl, "veg", DEFAULT_HALO)
         if dem is None or veg is None:
             return None
         dem_pad, present, meta = dem
@@ -305,18 +304,17 @@ def bal_tiles(tiles: DataFrame, fdi: int, halo: int = DEFAULT_HALO
     return _per_tile_apply(contribs, per_tile, _BAL_DDL)
 
 
-def bal_tiles_classified(tiles: DataFrame, fdi: int,
-                         halo: int = DEFAULT_HALO) -> DataFrame:
+def bal_tiles_classified(tiles: DataFrame, fdi: int) -> DataFrame:
     """BAL from PRE-CLASSIFIED veg/slope/aspect tile layers ('veg_r',
     'slope_r', 'aspect_r') — the reference's ``bal_cal`` entry point takes
     exactly these classified rasters (reference: calculate_bal.py:21-101,
     tests/test_scenario.py:40-77), so scenario-style inputs skip the
     DEM-derivation stage. Same border-strip halo plan as
     :func:`bal_tiles`."""
-    contribs = emit_border_strips(tiles, halo)
+    contribs = emit_border_strips(tiles)
 
     def per_tile(tx: int, ty: int, tbl: pa.Table):
-        got = [_assemble_arrow(tbl, lay, halo)
+        got = [_assemble_arrow(tbl, lay, DEFAULT_HALO)
                for lay in ("veg_r", "slope_r", "aspect_r")]
         if any(g is None for g in got):
             return None
@@ -353,22 +351,21 @@ _BAL_MAX_DDL = ("tile_x INT, tile_y INT, fdi INT, x0 DOUBLE, y0 DOUBLE, "
                 "bal_max ARRAY<FLOAT>")
 
 
-def bal_max_tiles(tiles: DataFrame, fdis=(100, 80, 50, 40),
-                  halo: int = DEFAULT_HALO) -> DataFrame:
+def bal_max_tiles(tiles: DataFrame, fdis=(100, 80, 50, 40)) -> DataFrame:
     """Multi-FDI serving variant: one bal_max layer per FDI per tile, all
     four AS 3959 FDI values computed in a single pass (slope/aspect and
     reclassification amortized across FDIs). This is the precompute that
     lets per-address queries with heterogeneous FDIs read a raster answer
     directly; the reference runs its whole pipeline once per FDI input
     (reference: bal.py:345-350)."""
-    contribs = emit_border_strips(tiles, halo)
+    contribs = emit_border_strips(tiles)
     aspect_remap_s = ASPECT_REMAP
     slope_remap_s = slope_remap(90.0)
     fdis = tuple(int(f) for f in fdis)
 
     def per_tile(tx: int, ty: int, tbl: pa.Table):
-        dem = _assemble_arrow(tbl, "dem", halo)
-        veg = _assemble_arrow(tbl, "veg", halo)
+        dem = _assemble_arrow(tbl, "dem", DEFAULT_HALO)
+        veg = _assemble_arrow(tbl, "veg", DEFAULT_HALO)
         if dem is None or veg is None:
             return None
         dem_pad, present, meta = dem

@@ -2,8 +2,7 @@
 
 Clean-room from the public TIFF 6.0 structure (byte order II/MM, IFD tag
 walk, strip layout): uncompressed, PackBits and LZW compression, 8-bit
-grayscale + RGB, horizontal-differencing predictor. It is the strip and
-tile codec under :mod:`geotiff`.
+grayscale + RGB, horizontal-differencing predictor.
 
 TIFF LZW (vs GIF LZW): MSB-first bit packing and the spec's "early change"
 — the code width bumps one code EARLIER than the table size strictly

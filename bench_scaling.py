@@ -84,7 +84,7 @@ def gen(batches):
 if "tile_bal" in jobs:
     tiles = coords.mapInPandas(gen, schema=TILES).cache()
     n_tiles = tiles.count() // 2
-    job = raster.bal_max_tiles(tiles, fdis=(100, 80, 50, 40), halo=13)
+    job = raster.bal_max_tiles(tiles, fdis=(100, 80, 50, 40))
     job.write.format("noop").mode("overwrite").save()   # warm-up
     walls = []
     for _ in range(reps):

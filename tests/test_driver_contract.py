@@ -6,7 +6,8 @@ value comparison lives in tools/check_oracles.py and the driver's gate.
 Also the input row-count memo the derived-world queries size themselves by,
 that every package module is reached from the engine or kept for a
 stated reason, that every public package function is reached or listed
-as test-only, and that README's layout tree names every package module."""
+as test-only, that README's layout tree names every package module, and
+that no new grouped-map (applyInPandas/applyInArrow) site appears."""
 
 import ast
 import pathlib
@@ -92,11 +93,13 @@ PKG = ROOT / "balrog_spark"
 # imports them, each for a reason of its own; a module that is neither
 # reached nor listed here is dead code
 KEEP = {
-    "geotiff": "tiled GeoTIFF source/sink for national raster layers",
-    "tiffcodec": "TIFF strip codecs under geotiff",
-    "serve": "single-address serving path, parity-tested with the pipeline",
-    "lineage": "per-bucket checkpoint and resume",
-    "reference_impl": "pure-numpy reference the kernels are tested against",
+    "tiffcodec": "no caller since geotiff was deleted; deleting it and "
+                 "its 24 tests is ROADMAP item 7's next step",
+    "lineage": "the per-partition lineage checkpoints and mid-run resume "
+               "of the north star (BASELINE.json)",
+    "reference_impl": "the reference kernels that tests and "
+                      "perfbench/checks.py compare against; also a root "
+                      "of the function-reachability walk below",
 }
 
 
@@ -158,10 +161,9 @@ def test_readme_layout_lists_every_package_module():
 TEST_ONLY = {
     "cells.morton_key", "corpus.spark_documents",
     "docparse.reassemble_documents", "geodesy.albers_forward",
-    "geodesy.albers_inverse", "geodesy.crs_params",
-    "geodesy.forward_azimuth_deg", "geodesy.geod_direct",
-    "geodesy.geod_inverse", "geodesy.haversine_m", "geodesy.lcc_forward",
-    "geodesy.lcc_inverse", "geodesy.projector_for_crs",
+    "geodesy.albers_inverse", "geodesy.forward_azimuth_deg",
+    "geodesy.geod_direct", "geodesy.geod_inverse", "geodesy.haversine_m",
+    "geodesy.lcc_forward", "geodesy.lcc_inverse",
     "geodesy.spherical_ring_area_m2", "geodesy.tm_forward",
     "geodesy.tm_inverse", "geometry.buffer_points_vec",
     "geometry.ring_centroid",
@@ -263,14 +265,36 @@ def test_one_cover_decision_point():
     assert {u for u in uses if u[0] != owner} == set()
 
 
+# the grouped-map sites left, each paying one Python call and one pandas
+# round trip per group; new grouped work goes through
+# session.map_key_groups (ROADMAP item 8 converts these)
+GROUPED_MAP = {"driver_queries._pack_grid_tiles",
+               "driver_queries.r3_extract_mask", "vector.dissolve_union",
+               "textops.pack_sequences"}
+
+
+def test_no_new_grouped_map_site():
+    """Every applyInPandas/applyInArrow call in the package, named by its
+    enclosing top-level function, is one of GROUPED_MAP, and every entry
+    still has its call."""
+    sites = set()
+    for p in PKG.glob("*.py"):
+        for fn in ast.parse(p.read_text()).body:
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call) and getattr(
+                        node.func, "attr", None) in ("applyInPandas",
+                                                     "applyInArrow"):
+                    sites.add(f"{p.stem}.{getattr(fn, 'name', '<module>')}")
+    assert sites == GROUPED_MAP
+
+
 # defaulted parameters of the engine's public operators that no call site
 # passes: each always takes its default. The set may only shrink; a new
 # option needs a caller (a query, pipeline, benchmark, tool or test)
 NEVER_SET = {
-    "joins.with_cell.x", "joins.with_cell.y", "raster.bal_max_tiles.halo",
-    "raster.bal_tiles.halo", "raster.bal_tiles_classified.halo",
-    "raster.build_pyramid.factor", "raster.extract_by_mask_tiles.layer",
-    "raster.find_aoi_mask.dem_layer", "raster.find_aoi_mask.veg_layer",
+    "joins.with_cell.x", "joins.with_cell.y", "raster.build_pyramid.factor",
+    "raster.extract_by_mask_tiles.layer", "raster.find_aoi_mask.dem_layer",
+    "raster.find_aoi_mask.veg_layer",
     "raster.polygonize_components.max_rounds",
     "raster.sample_tiles_at_points.x", "raster.sample_tiles_at_points.y",
     "textops.shingles.k"}
@@ -281,7 +305,9 @@ def test_every_option_is_set_by_a_caller():
     zonal, raster, vegfactors, pipeline and textops (``*_col`` column
     bindings aside) is passed, by keyword or by position, at some call
     site in the package, perfbench, bench*.py, tools or tests, or is
-    listed in NEVER_SET. Call sites match by function name."""
+    listed in NEVER_SET. Call sites match by function name. Calls inside
+    string literals (bench_scaling.py's f-string job template) are not
+    parsed, so an option set only there counts as never set."""
     options = {}  # function name -> [("module.function.param", position)]
     for mod in ("joins", "zonal", "raster", "vegfactors", "pipeline",
                 "textops"):

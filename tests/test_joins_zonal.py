@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from balrog_spark import (corpus, docparse, geometry, joins, kernels,
                           pipeline, zonal)
+from perfbench import checks
 
 NX, NY = 2, 2
 
@@ -225,10 +226,18 @@ def test_zonal_stats_matches_bruteforce(spark, corpus_dfs, flat):
             assert row[col] == exp[k], f"{a.addr_id} {k}"
 
 
-def test_address_bal_factors_end_to_end(spark, corpus_dfs):
+def test_address_bal_factors_end_to_end(spark, corpus_dfs, flat):
+    """Every address's row against perfbench's independent oracle: an
+    exhaustive nearest-polygon scan, whole-mosaic slope/aspect medians
+    and reference_impl.bal_esti."""
     docs, tiles = corpus_dfs
-    out = pipeline.address_bal_factors(spark, docs, tiles).toPandas()
+    addrs, vegs = flat
+    out = pipeline.address_bal_factors(spark, docs, tiles,
+                                       buffer_m=checks.RADIUS_M).toPandas()
     assert len(out) == NX * NY * 5
+    assert checks.check_address_bal(
+        out, addrs, vegs, checks.slope_aspect_mosaic(tiles.toPandas()),
+        0) == []
     assert set(out.bal.unique()) <= {-99.0, 12.5, 19.0, 29.0, 40.0, 100.0,
                                      200.0}
     # verify the JVM-side classify_bal against the numpy kernel row-by-row

@@ -256,7 +256,7 @@ def test_point_sample_out_of_extent_is_null(spark):
 
 
 def test_ragged_edge_tile_halo_exact(spark):
-    """Tiles narrower than the halo (a GeoTIFF whose width is not a
+    """Tiles narrower than the halo (a raster whose width is not a
     multiple of the tile size) must assemble halo-exactly: a full
     neighbour's 13-px strip used to overwrite a 5-px tile's core (and
     corner strips crashed on broadcast); strips now clip to the

@@ -1,7 +1,7 @@
-"""Baseline TIFF 6.0 codec (the strip decoder under geotiff): pure-numpy
-roundtrips over every compression x predictor x byte order, LZW
-width-schedule/clear coverage, PackBits edge cases, and hand-built
-big-endian and missing-StripByteCounts fixtures."""
+"""Baseline TIFF 6.0 codec: pure-numpy roundtrips over every compression
+x predictor x byte order, LZW width-schedule/clear coverage, PackBits
+edge cases, and hand-built big-endian and missing-StripByteCounts
+fixtures."""
 
 import struct
 
