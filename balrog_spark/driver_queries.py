@@ -2653,7 +2653,8 @@ def _flag_engine_tile_px(R: int) -> int:
     The oracle's raster extent is pinned by ``used = (R // 10) * 10``
     (_FLAG_TILE_PX stays 10 there); the engine is free to PACK that same
     extent into larger tiles — the halo exchange makes slope/aspect
-    tile-size-invariant, and zonal stats are per-pixel. 10x10-px tiles
+    tile-size-invariant, and zonal stats read each tile's extent from
+    its own row, so only _flag_dem_tiles reads this. 10x10-px tiles
     meant 1000 tiny applyInPandas groups + 9000 halo strips at sf0.1
     (measured 2.7 s for slope_aspect alone); 50x50 cuts that 25x. Pick
     the largest side that tiles the used extent and the grid width
@@ -2994,8 +2995,7 @@ def a1_zonal_touched(spark, sf_dir):
         "CAST((c_custkey * 2654435761) % 2500 AS DOUBLE) + 0.125 AS x",
         f"CAST((c_custkey * 2246822519) % {H} AS DOUBLE) + 0.625 AS y")
     out = zonal_mod.zonal_stats(
-        pts, _flag_dem_tiles(spark, sf_dir), 100.0,
-        tile_m=_flag_engine_tile_px(R) * 25.0, batch_m=500.0,
+        pts, _flag_dem_tiles(spark, sf_dir), 100.0, batch_m=500.0,
         include="touched")
     return out.select(
         F.col("addr_id").cast("long").alias("addr_id"),
@@ -3052,7 +3052,7 @@ def flagship_bal(spark, sf_dir):
     z = zonal_mod.zonal_stats_multi(
         pts.select("addr_id", "x", "y"), sa, 100.0,
         {"slope": {"circular": False}, "aspect": {"circular": True}},
-        tile_m=_flag_engine_tile_px(R) * 25.0, batch_m=500.0)
+        batch_m=500.0)
 
     f = pts.join(knn, "addr_id").join(
         z.select("addr_id", "slope_med", "aspect_med"), "addr_id", "left")
@@ -3375,7 +3375,7 @@ def flagship_veg_factors(spark, sf_dir):
     z = zonal_mod.zonal_stats_poly(
         zones, sa,
         {"slope": {"circular": False}, "aspect": {"circular": True}},
-        tile_m=_flag_engine_tile_px(R) * 25.0, batch_m=500.0)
+        batch_m=500.0)
     f = vf.join(pts.select("addr_id", "x", "y"), "addr_id") \
         .withColumn("zone_id", F.concat_ws("|", "addr_id", "veg_id")) \
         .join(z.select("zone_id", "slope_med", "aspect_med",

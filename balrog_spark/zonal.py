@@ -2,15 +2,19 @@
 
 Reference shape: buffer each address, mask the raster with the buffer, stats
 over surviving pixels (reference: testing/02_get_slope_from_buffer.py:219-251).
-Engine shape: a pure-column tile-range join (buffer bbox -> tile_x/tile_y
-sequence, exploded JVM-side) followed by ONE grouped Python stage
-(session.map_key_groups): the (address, tile) rows are clustered on a
-coarse spatial cell (``batch_m``, default 2 tiles) over an exchange pinned
-at ``defaultParallelism`` partitions, and one Python call per partition
-iterates runs of whole cells — the same plan raster._per_tile_apply uses.
-``batch_m`` only sets the clustering cell, not the number of Python calls:
-a call per address (14M at reference scale) or per cell would pay a UDF
-call and a pandas/Arrow round trip per group.
+Engine shape: a pure-column zone->tile join followed by ONE grouped
+Python stage (session.map_key_groups). The join reads each TILES row's
+extent from the row itself (x0, y0, nrows, ncols, pixel_m; not its
+grid indices), so any uniform cut of a raster gives the same stats; it
+meets zones on a fixed internal grid and crops each tile to the zone's
+bbox window before the shuffle (_zone_tiles). The (zone, tile) rows are
+then clustered on a coarse spatial cell (``batch_m``, default 2 corpus
+tiles) over an exchange pinned at ``defaultParallelism`` partitions, and
+one Python call per partition iterates runs of whole cells — the same
+plan raster._per_tile_apply uses. ``batch_m`` only sets the clustering
+cell, not the number of Python calls: a call per address (14M at
+reference scale) or per cell would pay a UDF call and a pandas/Arrow
+round trip per group.
 
 Sentinel contract: the tile join is a LEFT join, so an address whose buffer
 touches no stored tile still yields a row with the reference's -9999
@@ -58,55 +62,87 @@ ZONAL_OUT = StructType([
 DEFAULT_BATCH_M = 2 * TILE_M
 
 
-def tiles_for_buffers(points: DataFrame, tiles: DataFrame,
-                      radius_m: float, tile_m: float = TILE_M,
-                      crop: bool = True) -> DataFrame:
-    """LEFT-join each point to every tile its buffer bbox touches —
-    sequence + explode keeps the fan-out in codegen; the join is a plain
-    equi-join that AQE can broadcast when the tile side is small. Points
-    whose candidate tiles are absent keep a null-tile row (sentinel path).
-
-    ``crop=True`` (default) immediately slices each joined tile's ``data``
-    down to the point's buffer-bbox window (see _crop_to_buffer_window):
-    the (address x tile) rows that cross the downstream batch-groupBy
-    shuffle then carry ~(2r/pixel)^2 values instead of the full tile^2 —
-    at 14M addresses x 64^2..256^2-pixel tiles that is the difference
-    between shuffling hundreds of GB and a few GB. ``crop=False`` keeps
-    the full tiles (measurement / debugging only)."""
-    pts = points.select(
-        "addr_id", "x", "y",
-        F.explode(F.sequence(
-            F.floor((F.col("x") - radius_m) / tile_m),
-            F.floor((F.col("x") + radius_m) / tile_m))).alias("tx"))
-    pts = pts.select(
-        "addr_id", "x", "y", "tx",
-        F.explode(F.sequence(
-            F.floor((F.col("y") - radius_m) / tile_m),
-            F.floor((F.col("y") + radius_m) / tile_m))).alias("ty"))
-    pts = pts.select(
-        "addr_id", "x", "y",
-        F.col("tx").cast("int").alias("tile_x"),
-        F.col("ty").cast("int").alias("tile_y"))
-    n = pts.sparkSession.sparkContext.defaultParallelism
-    # spread the probe side: broadcast tile joins keep its partitioning
-    joined = pts.repartition(n, "addr_id") \
-        .join(tiles, ["tile_x", "tile_y"], "left")
-    return _crop_to_buffer_window(joined, radius_m) if crop else joined
+# side of the fixed grid on which zones meet tile rows: both sides explode
+# onto the cells their extents touch and equi-join on the cell. Any side
+# yields the same pairs; this one puts each corpus tile in one cell
+_JOIN_M = TILE_M
 
 
-def _crop_to_buffer_window(joined: DataFrame, radius_m: float) -> DataFrame:
-    """Buffer-circle special case of :func:`_crop_to_window`: the window is
-    the point's x/y +- radius bbox."""
-    r = F.lit(float(radius_m))
-    return _crop_to_window(joined, F.col("x") - r, F.col("x") + r,
-                           F.col("y") - r, F.col("y") + r)
+def _sql_double(v: float) -> str:
+    return f"{float(v)!r}D"
 
 
-def _crop_to_window(joined: DataFrame, xlo, xhi, ylo, yhi) -> DataFrame:
-    """Project each (zone, tile) row's ``data`` array down to the
-    sub-window of pixels whose centres can possibly fall inside the
-    [xlo, xhi] x [ylo, yhi] bbox (column expressions) — PURE column
-    expressions (sequence/transform/slice/flatten, all codegen), no UDF,
+# The join and crop expressions below are SQL text, not Column algebra:
+# each Column operator is one py4j round trip (~1 ms on a 4-vCPU box),
+# and built from operators the join and crop took ~0.1 s of driver time
+# per zonal call; one F.expr / selectExpr string is one round trip.
+
+def _zone_tiles(zones: DataFrame, tiles: DataFrame, key: str,
+                xlo: str, xhi: str, ylo: str, yhi: str) -> DataFrame:
+    """LEFT-join each zone to every tile row whose extent overlaps the
+    zone's closed bbox [xlo, xhi] x [ylo, yhi] (SQL expressions over
+    ``zones``' columns), each tile's ``data`` cropped to the bbox window
+    (:func:`_crop_to_window`). The output has ``zones``' columns plus
+    the tile's ``layer``, ``pixel_m`` and cropped
+    ``data``/``nrows``/``ncols``/``x0``/``y0``.
+
+    A row's extent is its own half-open [x0, x0 + ncols * pixel_m) x
+    [y0, y0 + nrows * pixel_m), so any cut of the raster joins the same
+    pixels and no caller states a tile size. Zone bboxes and tile extents
+    explode onto the ``_JOIN_M`` cells they touch and meet in an
+    equi-join on the cell that AQE can broadcast. A pair that shares
+    several cells is kept only in the cell holding the lower-left corner
+    of bbox ∩ extent, so it appears once with no dedupe. The zones are
+    spread over ``defaultParallelism`` partitions on ``key`` (a broadcast
+    tile join keeps that partitioning); a zone whose bbox overlaps no
+    tile keeps null-tile rows (the -9999 sentinel path)."""
+    g = _sql_double(_JOIN_M)
+
+    def cells(side, x_first, x_last, y_first, y_last):
+        # the cell rectangle as (_<side>x, _<side>y) rows, in one
+        # generator (a select takes one)
+        return (f"inline(flatten(transform(sequence({x_first}, {x_last}), "
+                f"cx -> transform(sequence({y_first}, {y_last}), "
+                f"cy -> named_struct('_{side}x', cx, '_{side}y', cy)))))")
+
+    x1, y1 = "(x0 + ncols * pixel_m)", "(y0 + nrows * pixel_m)"
+    n = zones.sparkSession.sparkContext.defaultParallelism
+    z = zones.selectExpr(
+        "*", cells("z", f"floor(({xlo}) / {g})", f"floor(({xhi}) / {g})",
+                   f"floor(({ylo}) / {g})", f"floor(({yhi}) / {g})")) \
+        .repartition(n, key)
+    # half-open extents: a tile ending on a cell edge stays out of the
+    # next cell
+    t = tiles.selectExpr(
+        "layer", "x0", "y0", "pixel_m", "nrows", "ncols", "data",
+        cells("t", f"floor(x0 / {g})", f"ceil({x1} / {g}) - 1",
+              f"floor(y0 / {g})", f"ceil({y1} / {g}) - 1"))
+    on = F.expr(
+        f"_zx = _tx AND _zy = _ty"
+        f" AND ({xlo}) < {x1} AND ({xhi}) >= x0"
+        f" AND ({ylo}) < {y1} AND ({yhi}) >= y0"
+        f" AND floor(greatest({xlo}, x0) / {g}) = _zx"
+        f" AND floor(greatest({ylo}, y0) / {g}) = _zy")
+    return _crop_to_window(z.join(t, on, "left"),
+                           [*zones.columns, "layer", "pixel_m"],
+                           xlo, xhi, ylo, yhi)
+
+
+def _tiles_for_buffers(points: DataFrame, tiles: DataFrame,
+                       radius_m: float) -> DataFrame:
+    """:func:`_zone_tiles` for circles: each point's zone is its x/y +-
+    radius bbox."""
+    r = _sql_double(radius_m)
+    return _zone_tiles(points.select("addr_id", "x", "y"), tiles, "addr_id",
+                       f"x - {r}", f"x + {r}", f"y - {r}", f"y + {r}")
+
+
+def _crop_to_window(joined: DataFrame, keep: list, xlo: str, xhi: str,
+                    ylo: str, yhi: str) -> DataFrame:
+    """Select ``keep`` plus each (zone, tile) row's ``data`` array cut
+    down to the sub-window of pixels whose centres can possibly fall
+    inside the [xlo, xhi] x [ylo, yhi] bbox (SQL expressions) — pure
+    column expressions (sequence/transform/slice/flatten), no UDF,
     evaluated BEFORE the batch-cell groupBy so the shuffle ships windows,
     not tiles.
 
@@ -117,43 +153,32 @@ def _crop_to_window(joined: DataFrame, xlo, xhi, ylo, yhi) -> DataFrame:
     projection rewrites to describe the window. Left-join miss rows (null
     tile) pass through null; a degenerate window yields an EMPTY tile
     (nrows=ncols=0), which downstream treats as zero surviving pixels."""
-    px = F.col("pixel_m")
-    n_, m_ = F.col("nrows"), F.col("ncols")
     # pixel-centre column/row ranges intersecting the bbox, clamped to the
     # tile (data row 0 is the NORTH edge: y of row i is
     # y0 + (nrows - i - 0.5) * pixel_m)
-    c0 = F.greatest(F.lit(0),
-                    (F.floor((xlo - F.col("x0")) / px) - 1)
-                    .cast("int"))
-    c1 = F.least(m_, (F.ceil((xhi - F.col("x0")) / px) + 1)
-                 .cast("int"))
-    r0 = F.greatest(F.lit(0),
-                    (F.floor(n_ - (yhi - F.col("y0")) / px) - 1)
-                    .cast("int"))
-    r1 = F.least(n_, (F.ceil(n_ - (ylo - F.col("y0")) / px) + 1)
-                 .cast("int"))
-    width = c1 - c0
+    c0 = f"greatest(0, CAST(floor((({xlo}) - x0) / pixel_m) - 1 AS INT))"
+    c1 = f"least(ncols, CAST(ceil((({xhi}) - x0) / pixel_m) + 1 AS INT))"
+    r0 = (f"greatest(0, CAST(floor(nrows - (({yhi}) - y0) / pixel_m) - 1"
+          f" AS INT))")
+    r1 = (f"least(nrows, CAST(ceil(nrows - (({ylo}) - y0) / pixel_m) + 1"
+          f" AS INT))")
+    width = f"({c1} - {c0})"
+    valid = f"data IS NOT NULL AND {r1} > {r0} AND {c1} > {c0}"
+    window = (f"flatten(transform(sequence({r0}, {r1} - 1), "
+              f"rr -> slice(data, rr * ncols + {c0} + 1, {width})))")
 
-    def row_slice(rr):
-        return F.slice(F.col("data"), rr * m_ + c0 + F.lit(1), width)
+    def if_valid(col, empty):
+        return (f"CASE WHEN {valid} THEN {col} "
+                f"WHEN data IS NOT NULL THEN {empty} END")
 
-    data_t = joined.schema["data"].dataType
-    valid = F.col("data").isNotNull() & (r1 > r0) & (c1 > c0)
-    window = F.flatten(F.transform(F.sequence(r0, r1 - 1), row_slice))
-    cropped = F.when(valid, window).otherwise(
-        F.when(F.col("data").isNotNull(), F.array().cast(data_t)))
-    zero_if_empty = lambda col: F.when(  # noqa: E731
-        valid, col).otherwise(
-        F.when(F.col("data").isNotNull(), F.lit(0)).cast("int"))
-    passthrough = [c for c in joined.columns
-                   if c not in ("data", "nrows", "ncols", "x0", "y0")]
-    return joined.select(
-        *passthrough,
-        cropped.alias("data"),
-        zero_if_empty(r1 - r0).alias("nrows"),
-        zero_if_empty(width).alias("ncols"),
-        (F.col("x0") + c0.cast("double") * px).alias("x0"),
-        (F.col("y0") + (n_ - r1).cast("double") * px).alias("y0"))
+    # slice(data, 1, 0): an empty array of data's own type
+    return joined.selectExpr(
+        *keep,
+        f"{if_valid(window, 'slice(data, 1, 0)')} AS data",
+        f"{if_valid(f'{r1} - {r0}', '0')} AS nrows",
+        f"{if_valid(width, '0')} AS ncols",
+        f"x0 + CAST({c0} AS DOUBLE) * pixel_m AS x0",
+        f"y0 + CAST(nrows - {r1} AS DOUBLE) * pixel_m AS y0")
 
 
 _EMPTY = np.array([], dtype=np.float64)
@@ -209,17 +234,17 @@ def _segment_values(group: pd.DataFrame, key_of_row: np.ndarray,
     return dict(zip(uk.tolist(), np.split(sv, starts[1:])))
 
 
-def _batched(joined: DataFrame, cx, cy, per_batch, out_schema,
+def _batched(joined: DataFrame, cx: str, cy: str, per_batch, out_schema,
              batch_m: float) -> DataFrame:
     """Cluster the (zone, tile) rows on the ``batch_m`` cell of each
-    zone's anchor point (``cx``, ``cy`` column expressions; every row of
+    zone's anchor point (``cx``, ``cy`` SQL expressions; every row of
     a zone shares it) and run ``per_batch(pandas_frame)`` over runs of
     whole cells, one Python call per partition (session.map_key_groups).
     ``per_batch`` must handle any number of zones; it returns a pandas
     frame with the columns of ``out_schema``."""
-    cell = F.lit(float(batch_m))
-    keyed = joined.withColumn("_bx", F.floor(cx / cell)) \
-        .withColumn("_by", F.floor(cy / cell))
+    cell = _sql_double(batch_m)
+    keyed = joined.selectExpr("*", f"floor(({cx}) / {cell}) AS _bx",
+                              f"floor(({cy}) / {cell}) AS _by")
     pa_schema = to_arrow_schema(out_schema)
 
     def run(tbl: pa.Table) -> pa.Table:
@@ -231,21 +256,18 @@ def _batched(joined: DataFrame, cx, cy, per_batch, out_schema,
 
 def zonal_stats(points: DataFrame, tiles: DataFrame, radius_m: float,
                 batch_m: float = DEFAULT_BATCH_M,
-                crop: bool = True, tile_m: float = TILE_M,
                 include: str = "centre") -> DataFrame:
     """Per-point stats of one raster layer within a circular buffer.
-    ``tile_m`` must match the tile grid of ``tiles`` (world metres per
-    tile side); ``include`` picks the pixel inclusion rule: 'centre' (engine
+    ``include`` picks the pixel inclusion rule: 'centre' (engine
     contract) keeps pixels whose CENTRE lies in the circle;
     'touched' keeps every pixel whose SQUARE intersects it —
     rasterio/arcpy all_touched=True, the reference's rule
     (testing/02_get_slope_from_buffer.py:219), exact
     circle-vs-square (distance from centre to the pixel rectangle
-    <= radius; implemented in _segment_values). The crop window's one-pixel margin already covers the
-    half-pixel the touched rule can add, so both rules ride the slim
-    shuffle."""
-    joined = tiles_for_buffers(points, tiles, radius_m, tile_m=tile_m,
-                               crop=crop)
+    <= radius; implemented in _segment_values). The crop window's
+    one-pixel margin already covers the half-pixel the touched rule can
+    add, so both rules ride the slim shuffle."""
+    joined = _tiles_for_buffers(points, tiles, radius_m)
 
     def stats(group: pd.DataFrame):
         codes, uniq = pd.factorize(group["addr_id"], sort=False)
@@ -261,23 +283,19 @@ def zonal_stats(points: DataFrame, tiles: DataFrame, radius_m: float,
             })
         return pd.DataFrame(rows, columns=[f.name for f in ZONAL_OUT])
 
-    return _batched(joined, F.col("x"), F.col("y"), stats, ZONAL_OUT,
-                    batch_m)
+    return _batched(joined, "x", "y", stats, ZONAL_OUT, batch_m)
 
 
 def zonal_stats_multi(points: DataFrame, tiles: DataFrame, radius_m: float,
                       layer_specs: dict,
-                      batch_m: float = DEFAULT_BATCH_M,
-                      crop: bool = True, tile_m: float = TILE_M
-                      ) -> DataFrame:
+                      batch_m: float = DEFAULT_BATCH_M) -> DataFrame:
     """Multi-layer zonal stats in ONE shuffle: ``layer_specs`` maps layer
     name -> {"circular": bool}; output has one column group per layer
     (<layer>_min .. <layer>_pixel_count). Halves the join/groupBy cost of
     running slope and aspect separately — the dominant fixed cost of the
     per-address pipeline."""
     layers = sorted(layer_specs)
-    joined = tiles_for_buffers(points, tiles, radius_m, tile_m=tile_m,
-                               crop=crop)
+    joined = _tiles_for_buffers(points, tiles, radius_m)
 
     fields = [StructField("addr_id", StringType(), False),
               StructField("buffer_size_m", DoubleType(), False)]
@@ -308,16 +326,14 @@ def zonal_stats_multi(points: DataFrame, tiles: DataFrame, radius_m: float,
             rows.append(row)
         return pd.DataFrame(rows, columns=[f.name for f in out_schema])
 
-    return _batched(joined, F.col("x"), F.col("y"), stats, out_schema,
-                    batch_m)
+    return _batched(joined, "x", "y", stats, out_schema, batch_m)
 
 
 def zonal_stats_poly(zones: DataFrame, tiles: DataFrame, layer_specs: dict,
-                     batch_m: float = DEFAULT_BATCH_M,
-                     tile_m: float = TILE_M) -> DataFrame:
+                     batch_m: float = DEFAULT_BATCH_M) -> DataFrame:
     """Zonal stats over ARBITRARY polygon zones (A1 generalized): ``zones``
     is (zone_id, wkt, xmin, ymin, xmax, ymax) — the bbox columns keep the
-    tile-range join and the window crop in pure codegen; the exact
+    zone->tile join and the window crop in pure column expressions; the exact
     pixel-centre-in-polygon mask (holes/even-odd) runs vectorized inside
     the grouped Python stage. This is the per-clipped-vegetation-polygon
     median step of the reference's Auto BAL Assessment (reference:
@@ -330,25 +346,9 @@ def zonal_stats_poly(zones: DataFrame, tiles: DataFrame, layer_specs: dict,
     of whole batch cells (keyed on the zone's bbox centre), sentinel row
     for zones touching no stored tile."""
     layers = sorted(layer_specs)
-    n_par = zones.sparkSession.sparkContext.defaultParallelism
-    base = ["zone_id", "wkt", "xmin", "ymin", "xmax", "ymax"]
-    z = zones.select(
-        *base,
-        F.explode(F.sequence(
-            F.floor(F.col("xmin") / F.lit(float(tile_m))),
-            F.floor(F.col("xmax") / F.lit(float(tile_m))))).alias("tx"))
-    z = z.select(
-        *base, "tx",
-        F.explode(F.sequence(
-            F.floor(F.col("ymin") / F.lit(float(tile_m))),
-            F.floor(F.col("ymax") / F.lit(float(tile_m))))).alias("ty"))
-    z = z.select(*base,
-                 F.col("tx").cast("int").alias("tile_x"),
-                 F.col("ty").cast("int").alias("tile_y"))
-    joined = z.repartition(n_par, "zone_id") \
-        .join(tiles, ["tile_x", "tile_y"], "left")
-    joined = _crop_to_window(joined, F.col("xmin"), F.col("xmax"),
-                             F.col("ymin"), F.col("ymax"))
+    joined = _zone_tiles(
+        zones.select("zone_id", "wkt", "xmin", "ymin", "xmax", "ymax"),
+        tiles, "zone_id", "xmin", "xmax", "ymin", "ymax")
 
     fields = [StructField("zone_id", StringType(), False)]
     for lay in layers:
@@ -393,6 +393,5 @@ def zonal_stats_poly(zones: DataFrame, tiles: DataFrame, layer_specs: dict,
             rows.append(row)
         return pd.DataFrame(rows, columns=[f.name for f in out_schema])
 
-    return _batched(joined, (F.col("xmin") + F.col("xmax")) / 2.0,
-                    (F.col("ymin") + F.col("ymax")) / 2.0, stats,
-                    out_schema, batch_m)
+    return _batched(joined, "(xmin + xmax) / 2.0D", "(ymin + ymax) / 2.0D",
+                    stats, out_schema, batch_m)

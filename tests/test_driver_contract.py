@@ -93,8 +93,6 @@ PKG = ROOT / "balrog_spark"
 # imports them, each for a reason of its own; a module that is neither
 # reached nor listed here is dead code
 KEEP = {
-    "tiffcodec": "no caller since geotiff was deleted; deleting it and "
-                 "its 24 tests is ROADMAP item 7's next step",
     "lineage": "the per-partition lineage checkpoints and mid-run resume "
                "of the north star (BASELINE.json)",
     "reference_impl": "the reference kernels that tests and "

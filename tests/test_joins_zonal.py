@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from balrog_spark import (corpus, docparse, geometry, joins, kernels,
-                          pipeline, zonal)
+                          pipeline, raster, zonal)
+from balrog_spark.schema import TILES
 from perfbench import checks
 
 NX, NY = 2, 2
@@ -304,18 +305,38 @@ def test_knn_join_exact_at_tiny_ring_budget(corpus_dfs, flat):
         assert r.veg_id == ev and abs(r.distance_m - ed) < 1e-9
 
 
-def test_zonal_crop_equals_full_tiles(spark):
-    """The buffer-window crop (production shuffle shape) must be
-    bit-identical to shuffling full tiles: random addresses plus
-    tile-boundary and out-of-coverage corners, both layers."""
+def _mosaic_stats(m, arr, x, y, radius, touched=False, circular=False):
+    """Zonal stats of ``arr`` (a whole-mosaic layer of ``m``) over the
+    pixels of the buffer around (x, y): centre in the circle, or with
+    ``touched`` every pixel whose square meets it."""
+    half = m.pixel_m / 2.0 if touched else 0.0
+
+    def inside(xs, ys):
+        dx = np.maximum(np.abs(xs - x) - half, 0.0)
+        dy = np.maximum(np.abs(ys - y) - half, 0.0)
+        return dx ** 2 + dy ** 2 <= radius ** 2
+
+    return kernels.zonal_stats_1d(
+        m.values(arr, x - radius, x + radius, y - radius, y + radius,
+                 inside), circular=circular)
+
+
+ORDER_FREE = ("min", "max", "med", "pixel_count")
+
+
+def test_zonal_multi_edges_match_mosaic(spark):
+    """Multi-layer buffer stats on random addresses plus tile-boundary
+    and out-of-coverage corners equal the whole-mosaic slope/aspect
+    stats (perfbench.checks): the tile join and the window crop lose no
+    pixel at tile edges."""
     import random
 
-    import pandas as pd
-
-    from balrog_spark import corpus, raster, zonal
-
-    tiles = corpus.spark_tiles(spark, 3, 3)
-    sa = raster.slope_aspect_tiles(tiles, classify=False)
+    tiles = corpus.tiles_pdf([(tx, ty) for tx in range(3)
+                              for ty in range(3)], layers=("dem",))
+    m, slope, aspect = checks.slope_aspect_mosaic(tiles)
+    sa = raster.slope_aspect_tiles(spark.createDataFrame(tiles,
+                                                         schema=TILES),
+                                   classify=False)
     rng = random.Random(7)
     world = 3 * corpus.TILE_M
     rows = [(f"{i:05d}", rng.uniform(0, world), rng.uniform(0, world))
@@ -326,32 +347,36 @@ def test_zonal_crop_equals_full_tiles(spark):
              ("out1", world + 5000.0, 100.0)]  # sentinel path
     pts = spark.createDataFrame(rows, "addr_id string, x double, y double")
     specs = {"slope": {"circular": False}, "aspect": {"circular": True}}
-    a = zonal.zonal_stats_multi(pts, sa, 100.0, specs, crop=True) \
-        .toPandas().sort_values("addr_id").reset_index(drop=True)
-    b = zonal.zonal_stats_multi(pts, sa, 100.0, specs, crop=False) \
-        .toPandas().sort_values("addr_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    assert a[a.addr_id == "out1"].slope_med.iloc[0] == -9999
+    got = zonal.zonal_stats_multi(pts, sa, 100.0, specs).toPandas() \
+        .set_index("addr_id")
+    assert len(got) == len(rows)
+    for addr, x, y in rows:
+        for lay, arr in (("slope", slope), ("aspect", aspect)):
+            exp = _mosaic_stats(m, arr, x, y, 100.0,
+                                circular=specs[lay]["circular"])
+            for k in ORDER_FREE:
+                assert got.loc[addr, f"{lay}_{k}"] == exp[k], \
+                    f"{addr} {lay}_{k}"
+    assert got.loc["out1", "slope_med"] == -9999
 
 
 def test_zonal_touched_rule_supersets_centre(spark):
     """all_touched zonal: the touched pixel set must contain the centre
     set for every address (a square intersecting the circle whenever its
     centre is inside), strictly more on buffers that graze pixel edges,
-    and both rules must agree through crop and no-crop paths."""
-    import pandas as pd
-
-    from balrog_spark import corpus, zonal
-
-    tiles = corpus.spark_tiles(spark, 2, 2).where(F.col("layer") == "dem")
+    and both rules must equal the whole-mosaic stats."""
+    tiles = corpus.tiles_pdf([(0, 0), (0, 1), (1, 0), (1, 1)],
+                             layers=("dem",))
+    m = checks.mosaic(tiles, "dem")
+    dem = spark.createDataFrame(tiles, schema=TILES)
     rng = __import__("random").Random(3)
     world = 2 * corpus.TILE_M
     rows = [(f"{i:04d}", rng.uniform(0, world), rng.uniform(0, world))
             for i in range(60)]
     pts = spark.createDataFrame(rows, "addr_id string, x double, y double")
-    c = zonal.zonal_stats(pts, tiles, 100.0).toPandas() \
+    c = zonal.zonal_stats(pts, dem, 100.0).toPandas() \
         .set_index("addr_id").sort_index()
-    t = zonal.zonal_stats(pts, tiles, 100.0, include="touched").toPandas() \
+    t = zonal.zonal_stats(pts, dem, 100.0, include="touched").toPandas() \
         .set_index("addr_id").sort_index()
     both = c.join(t, lsuffix="_c", rsuffix="_t")
     live = both[both.pixel_count_c > 0]
@@ -359,10 +384,13 @@ def test_zonal_touched_rule_supersets_centre(spark):
     assert (live.pixel_count_t > live.pixel_count_c).any()
     assert (live.stat_min_t <= live.stat_min_c).all()
     assert (live.stat_max_t >= live.stat_max_c).all()
-    t2 = zonal.zonal_stats(pts, tiles, 100.0, include="touched",
-                           crop=False).toPandas() \
-        .set_index("addr_id").sort_index()
-    pd.testing.assert_frame_equal(t, t2)
+    for addr, x, y in rows:
+        for got, touched in ((c, False), (t, True)):
+            exp = _mosaic_stats(m, m.arr, x, y, 100.0, touched=touched)
+            for k, col in (("min", "stat_min"), ("max", "stat_max"),
+                           ("med", "stat_med"),
+                           ("pixel_count", "pixel_count")):
+                assert got.loc[addr, col] == exp[k], f"{addr} {col}"
 
 
 def test_polygon_cover_refuses_clipped_padded(spark):
